@@ -30,12 +30,17 @@ import graft.sources.Tables
   */
 object DataTests {
 
-  sealed trait Check
+  /** `model` is the model a check attaches to (a Relationships check's
+    * child), after which `dbt build` runs it.
+    */
+  sealed trait Check { def model: String }
   final case class Unique(model: String, columns: Seq[String]) extends Check
   final case class NotNull(model: String, column: String) extends Check
   final case class AcceptedValues(model: String, column: String, values: Seq[String]) extends Check
   final case class Relationships(childModel: String, childColumn: String,
-      parentModel: String, parentColumn: String) extends Check
+      parentModel: String, parentColumn: String) extends Check {
+    def model: String = childModel
+  }
   /** dbt SINGULAR test — a `.sql` file under `tests/` whose RESULT
     * ROWS are the violations: arbitrary assertions (cross-model joins,
     * business rules) the four generic tests can't express. `model`

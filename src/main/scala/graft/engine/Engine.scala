@@ -124,9 +124,9 @@ final case class Model(
       * ANALYZE). `{{ this }}` resolves to the model's warehouse path
       * and `{% if is_incremental() %}` blocks resolve against the same
       * build-time target context SQL-text models see. Hooks run on the
-      * materializing thread, so under [[DagRunner.runParallel]] a
-      * model's hooks serialize with its own build (dbt's contract),
-      * not with other models'.
+      * materializing worker, so with several [[DagRunner.build]]
+      * threads a model's hooks serialize with its own build (dbt's
+      * contract), not with other models'.
       */
     preHooks: Seq[String] = Nil,
     postHooks: Seq[String] = Nil,
@@ -160,7 +160,10 @@ final case class Model(
       * drops), or `fail` (any column-set change aborts the model).
       * Full refresh / first run always writes the run's own schema.
       */
-    onSchemaChange: String = "ignore") {
+    onSchemaChange: String = "ignore",
+    /** False when [[DagRunner.withLazyUpstreams]] added the model only as
+      * an input: [[DagRunner.build]] builds it but does not test it. */
+    selected: Boolean = true) {
   require(Set("private", "protected", "public").contains(access),
     s"model $name: unknown access '$access'")
   require(Set("ignore", "append_new_columns", "sync_all_columns", "fail")
@@ -295,10 +298,12 @@ object DagRunner {
     * previous full run the way it can a Table-family upstream (dbt's
     * contract: those persist) — so their subtrees must join the
     * selection and build in-process. They are lazy plans, free until a
-    * descendant scans them.
+    * descendant scans them. The added models come back with
+    * `selected = false`, so [[build]] does not test them.
     */
   def withLazyUpstreams(all: Seq[Model], selected: Seq[Model]): Seq[Model] = {
-    var names = selected.map(_.name).toSet
+    val picked = selected.map(_.name).toSet
+    var names = picked
     var grew = true
     while (grew) {
       val lazyDeps = all.filter(m => !names(m.name) &&
@@ -308,6 +313,7 @@ object DagRunner {
       names ++= lazyDeps.map(_.name)
     }
     all.filter(m => names(m.name))
+      .map(m => if (picked(m.name)) m else m.copy(selected = false))
   }
 
   /** Physical target of a table-family model: dbt's two-level
@@ -460,14 +466,15 @@ object DagRunner {
   def writeRunResults(spark: SparkSession, report: BuildReport, path: String): Unit = {
     def arr(ns: Iterable[String]) = ns.toSeq.sorted.map(jstr).mkString("[", ",", "]")
     val body = s"""{"built":${arr(report.built.keys)},""" +
-      s""""failures":${arr(report.failures.keys)},"skipped":${arr(report.skipped)}}"""
+      s""""failures":${arr(report.failures.keys)},"errors":${arr(report.errors.keys)},""" +
+      s""""skipped":${arr(report.skipped)}}"""
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
   }
 
-  /** dbt `retry`: the models the previous build FAILED or SKIPPED —
+  /** dbt `retry`: the models the previous build FAILED, ERRORED or SKIPPED —
     * rerun exactly these (successful upstreams resolve from the
     * warehouse, like any `--select` subgraph run). Empty when the last
     * build was green.
@@ -487,7 +494,7 @@ object DagRunner {
         out.result()
       }
     }
-    val rerun = names("failures") ++ names("skipped")
+    val rerun = names("failures") ++ names("errors") ++ names("skipped")
     models.filter(m => rerun(m.name))
   }
 
@@ -771,14 +778,6 @@ object DagRunner {
     models.filter(m => picked(m.name))
   }
 
-  /** Materialize every model in dependency order. `resolve` supplies
-    * external sources (the `source()` analog); `ref()` lookups hit the
-    * materialized map. Returns the materialized frames by name.
-    * `onRunStart` / `onRunEnd` are dbt's project-level hooks: SQL run
-    * once before the first model and once after the last (audit-run
-    * bookkeeping, session settings); `onRunEnd` runs only on SUCCESS,
-    * matching dbt.
-    */
   /** Enforce dbt's group/access governance on the ref graph: a
     * PRIVATE model may be ref'd only from models in its own group.
     * Checked before anything builds, across the full model set handed
@@ -824,19 +823,22 @@ object DagRunner {
                warehouse: String = ""): Map[String, DataFrame] =
     run(spark, models, n => resolve(n).limit(0), warehouse)
 
+  /** `dbt run`: [[build]] without data tests and with `failFast`; the
+    * first error is rethrown. `resolve` supplies external sources (the
+    * `source()` analog); `ref()` lookups hit the materialized map.
+    * Returns the materialized frames by name. `onRunStart` / `onRunEnd`
+    * are dbt's project-level hooks, run once before the first model and
+    * once after the last; `onRunEnd` runs only on SUCCESS, matching dbt.
+    */
   def run(spark: SparkSession, models: Seq[Model], resolve: String => DataFrame,
           warehouse: String = "", onRunStart: Seq[String] = Nil,
-          onRunEnd: Seq[String] = Nil): Map[String, DataFrame] = {
+          onRunEnd: Seq[String] = Nil, threads: Option[Int] = None): Map[String, DataFrame] = {
     validateAccess(models)
     onRunStart.foreach(spark.sql(_))
-    var built = Map.empty[String, DataFrame]
-    def lookup(n: String): DataFrame = built.getOrElse(n, resolve(n))
-    topoSort(models).foreach { m =>
-      val refs = m.refs.map(r => r -> lookup(r)).toMap
-      built += m.name -> materializeOne(spark, m, warehouse, refs)
-    }
+    val report = build(spark, models, resolve, warehouse, threads = threads, failFast = true)
+    report.errors.headOption.foreach { case (_, t) => throw t }
     onRunEnd.foreach(spark.sql(_))
-    built
+    report.built
   }
 
   /** Outcome of [[build]] (the `dbt build` analog): materialized frames
@@ -852,22 +854,26 @@ object DagRunner {
         * reported, but the model still counts as built and its
         * descendants still run.
         */
-      warnings: Map[String, Seq[(String, Long)]] = Map.empty) {
-    def ok: Boolean = failures.isEmpty && skipped.isEmpty
+      warnings: Map[String, Seq[(String, Long)]] = Map.empty,
+      /** Models whose build or tests threw (dbt's `error`), in order. */
+      errors: Map[String, Throwable] = Map.empty) {
+    def ok: Boolean = failures.isEmpty && skipped.isEmpty && errors.isEmpty
   }
 
-  /** The `dbt build` equivalent: materialize models in dependency order
-    * and run each model's declared data tests IMMEDIATELY after it
-    * materializes — not as a separate pass — so a model that fails its
-    * tests stops its descendants from building on bad data (dbt build's
-    * whole point vs `run; test`). Checks attach to a model by their
-    * `model` field (`Relationships` attaches to the CHILD — it can only
-    * run once the child exists, and dbt likewise tests the child).
-    * Failure semantics match dbt: the failing model's descendants are
-    * SKIPPED, siblings on other branches keep building, and the whole
-    * report is returned (callers decide whether to throw; `ok` is the
-    * exit-code analog). Each check's violation count is a one-row
-    * aggregate — driver-bounded regardless of model size.
+  /** The `dbt build` equivalent and the one DAG scheduler: a model goes
+    * to a pool of `threads` workers (dbt's `threads:`; by default one per
+    * core Spark schedules on, at most one per model) once its last in-set
+    * ref has finished. Results do not depend on the schedule. A model's
+    * data tests run on its worker right after it materializes; one that
+    * fails them (`failures`) or throws (`errors`) has its descendants
+    * SKIPPED while independent branches finish (dbt's semantics; `ok` is
+    * the exit-code analog). Checks attach to their `model`
+    * (`Relationships` to the CHILD, which also waits for the parent) and
+    * run for selected models only, as in dbt `build --select X+`: the
+    * views [[withLazyUpstreams]] adds are built, not tested, and a
+    * `Relationships` check runs when either end is selected. `resolve`
+    * runs on the caller's thread; every job a worker starts is tagged
+    * `graft:<build|test>:<model>:<run id>`.
     */
   def build(spark: SparkSession, models: Seq[Model], resolve: String => DataFrame,
             warehouse: String = "",
@@ -876,51 +882,118 @@ object DagRunner {
               * `BuildReport.warnings` but never fail the model or skip
               * its descendants.
               */
-            warnChecks: Seq[DataTests.Check] = Nil): BuildReport = {
+            warnChecks: Seq[DataTests.Check] = Nil,
+            threads: Option[Int] = None,
+            /** dbt `--fail-fast`: the first error or failing test cancels
+              * the running models' jobs; models not yet started skip. */
+            failFast: Boolean = false): BuildReport = {
+    import java.util.concurrent.{CancellationException, ExecutorCompletionService, Executors}
+    import java.util.concurrent.atomic.AtomicBoolean
     validateAccess(models)
-    def checkModel(c: DataTests.Check): String = c match {
-      case DataTests.Unique(m, _) => m
-      case DataTests.NotNull(m, _) => m
-      case DataTests.AcceptedValues(m, _, _) => m
-      case DataTests.Relationships(cm, _, _, _) => cm
-      case DataTests.Singular(m, _, _) => m
-    }
-    val byModel = checks.groupBy(checkModel)
-    val warnByModel = warnChecks.groupBy(checkModel)
-    var built = Map.empty[String, DataFrame]
-    var failures = Map.empty[String, Seq[(String, Long)]]
-    var warnings = Map.empty[String, Seq[(String, Long)]]
-    var dead = Set.empty[String] // failed or skipped — poisons descendants
-    var skipped = List.empty[String]
-    def lookup(n: String): DataFrame = built.getOrElse(n, resolve(n))
-    topoSort(models).foreach { m =>
-      if (m.refs.exists(dead)) {
-        dead += m.name; skipped ::= m.name
-      } else {
-        val refs = m.refs.map(r => r -> lookup(r)).toMap
-        val df = materializeOne(spark, m, warehouse, refs)
+    val ordered = topoSort(models)
+    val byName = ordered.map(m => m.name -> m).toMap
+    def runs(c: DataTests.Check): Boolean = (c match {
+      case DataTests.Relationships(cm, _, pm, _) => Seq(cm, pm)
+      case _ => Seq(c.model)
+    }).exists(n => byName.get(n).exists(_.selected))
+    val byModel = checks.filter(runs).groupBy(_.model)
+    val warnByModel = warnChecks.filter(runs).groupBy(_.model)
+    // What a model's checks read besides the model: a Relationships
+    // parent, a singular test's refs. The model waits for those that come
+    // first in dependency order; a later one resolves as a model outside
+    // the set does, as it did in the one-at-a-time runner.
+    val checkReads = ordered.map(m => m.name ->
+      (byModel.getOrElse(m.name, Nil) ++ warnByModel.getOrElse(m.name, Nil)).flatMap {
+        case DataTests.Relationships(_, _, pm, _) => Seq(pm)
+        case DataTests.Singular(_, _, sql) => SqlModel.extractRefs(sql)
+        case _ => Nil
+      }.filter(_ != m.name)).toMap
+    val position = ordered.map(_.name).zipWithIndex.toMap
+    val after = ordered.map(m => m.name -> (m.refs ++
+      checkReads(m.name).filter(position.get(_).exists(_ < position(m.name))))
+      .filter(byName.contains).toSet).toMap
+    val sc = spark.sparkContext
+    val runId = java.util.UUID.randomUUID().toString.take(8)
+    def jobTag(phase: String, model: String) = s"graft:$phase:${model.replace(',', '_')}:$runId"
+    val stop = new AtomicBoolean(false)
+    type Done = (DataFrame, Seq[(String, Long)], Seq[(String, Long)]) // frame, failed, warned
+    def work(m: Model, inputs: Map[String, DataFrame]): Either[Throwable, Done] = {
+      def phase[T](name: String)(body: => T): T = {
+        if (stop.get()) throw new CancellationException(s"${m.name}: an earlier model failed")
+        val tag = jobTag(name, m.name)
+        sc.addJobTag(tag)
+        try body finally sc.removeJobTag(tag)
+      }
+      try {
+        val df = phase("build")(
+          materializeOne(spark, m, warehouse, m.refs.map(r => r -> inputs(r)).toMap))
         def violations(mine: Seq[DataTests.Check]): Seq[(String, Long)] =
           if (mine.isEmpty) Nil
-          else DataTests.run(n => if (n == m.name) df else lookup(n), mine)
+          else DataTests.run(n => if (n == m.name) df else inputs(n), mine)
             .filter(col("n_violations") > 0)
             .collect()
             .map(r => (s"${r.getString(0)}(${r.getString(2)})", r.getLong(3)))
             .toSeq
-        val bad = violations(byModel.getOrElse(m.name, Nil))
-        val warned = violations(warnByModel.getOrElse(m.name, Nil))
-        if (warned.nonEmpty) warnings += m.name -> warned
-        if (bad.isEmpty) built += m.name -> df
-        else { failures += m.name -> bad; dead += m.name }
-      }
+        val (mine, warn) = (byModel.getOrElse(m.name, Nil), warnByModel.getOrElse(m.name, Nil))
+        if (mine.isEmpty && warn.isEmpty) Right((df, Nil, Nil))
+        else phase("test")(Right((df, violations(mine), violations(warn))))
+      } catch { case t: Throwable => Left(t) }
     }
-    BuildReport(built, failures, skipped.reverse, warnings)
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, threads.getOrElse(math.min(sc.defaultParallelism, ordered.size))))
+    val finished = new ExecutorCompletionService[(String, Either[Throwable, Done])](pool)
+    val waiting = scala.collection.mutable.Map(after.toSeq.map { case (m, ds) => m -> ds.size }: _*)
+    var built = Map.empty[String, DataFrame]
+    var failures = Map.empty[String, Seq[(String, Long)]]
+    var warnings = Map.empty[String, Seq[(String, Long)]]
+    var errors = scala.collection.immutable.ListMap.empty[String, Throwable]
+    var dead = Set.empty[String] // failed, errored or skipped — poisons descendants
+    var running = Set.empty[String]
+    def ready(name: String): Unit = {
+      val m = byName(name)
+      if (stop.get() || m.refs.exists(dead)) {
+        dead += name; release(name)
+      } else try {
+        // `resolve` is the caller's: it runs on the caller's thread.
+        val inputs = (m.refs ++ checkReads(name)).distinct
+          .map(n => n -> built.getOrElse(n, resolve(n))).toMap
+        running += name
+        finished.submit(() => name -> work(m, inputs))
+      } catch { case scala.util.control.NonFatal(t) => record(name, Left(t)) }
+    }
+    def release(name: String): Unit = ordered.filter(d => after(d.name)(name)).foreach { d =>
+      waiting(d.name) -= 1
+      if (waiting(d.name) == 0) ready(d.name)
+    }
+    def record(name: String, outcome: Either[Throwable, Done]): Unit = {
+      outcome match {
+        case Left(t) => errors += name -> t; dead += name
+        case Right((df, bad, warned)) =>
+          if (warned.nonEmpty) warnings += name -> warned
+          if (bad.isEmpty) built += name -> df
+          else { failures += name -> bad; dead += name }
+      }
+      if (failFast && dead(name) && !stop.getAndSet(true))
+        for (r <- running; p <- Seq("build", "test")) sc.cancelJobsWithTag(jobTag(p, r))
+      release(name)
+    }
+    try {
+      ordered.filter(m => waiting(m.name) == 0).foreach(m => ready(m.name))
+      while (running.nonEmpty) {
+        val (name, outcome) = finished.take().get()
+        running -= name
+        record(name, outcome)
+      }
+    } finally pool.shutdown()
+    val skipped = ordered.map(_.name).filter(n => dead(n) && !failures.contains(n) && !errors.contains(n))
+    BuildReport(built, failures, skipped, warnings, errors)
   }
 
   /** Build-time target info exposed to SQL-text models for dbt's
     * `is_incremental()` / `{{ this }}`: the model's own warehouse path
     * (when a warehouse is configured), whether its materialization is
     * incremental, and whether the target already exists on disk. Set
-    * around each `m.build` call (thread-local — [[runParallel]] builds
+    * around each `m.build` call (thread-local — [[build]] runs models
     * on pool threads) and cleared after.
     */
   final case class BuildTarget(path: Option[String], incremental: Boolean, exists: Boolean)
@@ -930,7 +1003,7 @@ object DagRunner {
   private[engine] def currentBuildTarget: Option[BuildTarget] = buildContext.get()
 
   /** Build + materialize one model given its resolved upstream frames —
-    * the shared body of [[run]] and [[runParallel]].
+    * the body of each [[build]] worker.
     */
   private def materializeOne(spark: SparkSession, m: Model, warehouse: String,
                              refs: Map[String, DataFrame]): DataFrame = {
@@ -1149,56 +1222,6 @@ object DagRunner {
     else df
   }
 
-  /** dbt `threads`-style materialization: models whose upstreams are
-    * complete run CONCURRENTLY on a bounded pool while dependency order
-    * is preserved exactly (a model is submitted only when its last
-    * in-set ref lands). Spark's scheduler interleaves the concurrent
-    * jobs across executors, so a wide DAG level — e.g. the reference's
-    * six independent reporting models — overlaps its scans and writes
-    * instead of serializing them; at 100 TB the win is wall-clock, not
-    * work. Results are identical to [[run]]: each model's output
-    * depends only on its refs, never on schedule. First failure wins:
-    * queued models are cancelled and the cause rethrown.
-    */
-  def runParallel(spark: SparkSession, models: Seq[Model], resolve: String => DataFrame,
-                  warehouse: String = "", threads: Int = 4): Map[String, DataFrame] = {
-    import java.util.concurrent.{ConcurrentHashMap, Executors}
-    import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
-    validateAccess(models)
-    val ordered = topoSort(models) // validates acyclicity up front
-    val byName = ordered.map(m => m.name -> m).toMap
-    val built = new ConcurrentHashMap[String, DataFrame]()
-    val remaining = new ConcurrentHashMap[String, AtomicInteger]()
-    ordered.foreach(m =>
-      remaining.put(m.name, new AtomicInteger(m.refs.distinct.count(byName.contains))))
-    val dependents = ordered.flatMap(m =>
-      m.refs.distinct.filter(byName.contains).map(_ -> m.name))
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
-    val pool = Executors.newFixedThreadPool(math.max(1, threads))
-    val failure = new AtomicReference[Throwable]()
-    def submit(name: String): Unit = pool.submit(new Runnable {
-      def run(): Unit =
-        try {
-          if (failure.get() == null) {
-            val m = byName(name)
-            val refs = m.refs.map(r =>
-              r -> Option(built.get(r)).getOrElse(resolve(r))).toMap
-            built.put(name, materializeOne(spark, m, warehouse, refs))
-            dependents.getOrElse(name, Nil).foreach { d =>
-              if (remaining.get(d).decrementAndGet() == 0) submit(d)
-            }
-          }
-        } catch { case t: Throwable => failure.compareAndSet(null, t) }
-    })
-    ordered.filter(m => remaining.get(m.name).get() == 0).foreach(m => submit(m.name))
-    try {
-      while (built.size() < ordered.size && failure.get() == null) Thread.sleep(10)
-    } finally pool.shutdownNow()
-    if (failure.get() != null) throw failure.get()
-    import scala.jdk.CollectionConverters._
-    built.asScala.toMap
-  }
-
   /** `dbt run` + `dbt test`: materialize the WHOLE DAG, then execute
     * the declared [[DataTests.Check]]s against the MATERIALIZED outputs
     * (tests see what the warehouse sees, not the pre-write plan).
@@ -1228,24 +1251,6 @@ object DagRunner {
     (built, summary)
   }
 
-  /** Replace exactly `partitions` of the target, preserving all others.
-    * The source filter is derived from the SAME list that selects the
-    * overwritten partitions — the invariant the reference maintains by
-    * hand (`atinternet_smarttag_streams_daily_v4.sql:1-12` vs 75,101).
-    * At 100 TB this writes only the reprocessing window (the reference's
-    * rolling 9 days), never the full table.
-    *
-    * dbt's `insert_overwrite` with an explicit partition list deletes
-    * every LISTED partition even when the new frame has no rows for it
-    * (a fully-retracted day must disappear). Spark's dynamic partition
-    * overwrite only replaces partitions present in the written frame, so
-    * after the write the listed-but-ABSENT partition directories are
-    * dropped explicitly. Deleting after (not before) the write means a
-    * failed job leaves the previous window intact — no data-loss gap
-    * between delete and write. The extra `distinct` to learn which
-    * partitions were written scans only the reprocessing window (one
-    * narrow column, map-side combined).
-    */
   /** The microbatch batch list: every day from `begin` (first run /
     * --full-refresh) or from `maxExistingDay - (lookback-1)` (the
     * late-arrival reprocess window) through `asOf`, ascending. Derived
@@ -1279,30 +1284,24 @@ object DagRunner {
       .map(_.toString).toSeq
   }
 
+  /** Replace exactly `partitions` of the target, preserving all others
+    * (dbt `insert_overwrite`). The source filter derives from the SAME
+    * list (the invariant the reference keeps by hand,
+    * `atinternet_smarttag_streams_daily_v4.sql:1-12` vs 75,101). Every
+    * listed partition directory is dropped first, then one
+    * dynamic-overwrite write runs the model plan once: a listed partition
+    * without new rows disappears, unlisted ones keep their files. A crash
+    * between drop and commit leaves a window partition missing until the
+    * next run's identical window rewrites it.
+    */
   def writeIncremental(spark: SparkSession, df: DataFrame, path: String,
                        partitionCol: String, partitions: Seq[String]): Unit = {
     import org.apache.hadoop.fs.Path
     // NULL-safe via the shared window predicate: a listed null (or "")
     // partition must select its replacement rows, not silently filter
-    // them out and then have the drop loop erase the existing data.
+    // them out after its directory was dropped.
     val partsOpt = partitions.map(p => normPart(Option(p))).distinct
     val filtered = df.filter(partitionWindow(partitionCol, partitions.map(Option(_))))
-    // Drop every LISTED partition up front, then one dynamic-overwrite
-    // write. The previous shape (write, then a distinct-collect of the
-    // partition column to learn which listed partitions got no
-    // replacement rows, then drop those) executed the FULL model plan
-    // TWICE per incremental build — the distinct pass recomputes the
-    // whole upstream subtree, it cannot reuse the write's work
-    // (optimization round 14, guide §1.2: don't compute things you
-    // throw away; measured 2.7 s → 1.4 s on the reference incremental
-    // model at sf0.1). Final state is identical: listed partitions with
-    // replacement rows are rewritten by the dynamic overwrite, listed
-    // partitions without rows stay dropped, unlisted partitions are
-    // never touched (file identity preserved — EngineSpec pins it). A
-    // crash between drop and commit leaves a window partition absent
-    // instead of stale; the next run's identical window (insert
-    // overwrite re-derives it from today, microbatch re-lists days from
-    // the target) rewrites it.
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root))

@@ -488,12 +488,22 @@ object ProjectLoader {
         // Render each partition EXPRESSION (var substitution) and
         // evaluate the whole list as one constant SELECT — the loader's
         // analog of BigQuery evaluating dbt's partition expressions.
+        // The optimizer folds a constant list to literals without running it;
+        // only a list that does not fold runs as a Spark job.
         val exprs = items.map(SqlModel.substituteVars(_, vars))
-        val row = spark.sql(
+        val select = spark.sql(
           exprs.zipWithIndex.map { case (e, i) => s"$e AS p$i" }
-            .mkString("SELECT ", ", ", "")).head()
-        IncrementalInsertOverwrite(partCol,
-          exprs.indices.map(i => String.valueOf(row.get(i))))
+            .mkString("SELECT ", ", ", ""))
+        import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+        import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+        import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+        val literals = select.queryExecution.optimizedPlan match {
+          case Project(list, _: OneRowRelation) =>
+            list.collect { case Alias(Literal(v, t), _) => convertToScala(v, t) }
+          case _ => Nil
+        }
+        val values = if (literals.size == exprs.size) literals else select.head().toSeq
+        IncrementalInsertOverwrite(partCol, values.map(v => String.valueOf(v)))
       case "merge" | "delete+insert" =>
         // On a parquet file warehouse the two strategies share one
         // mechanism: writeMerge's key-anti-join + insert. `merge`

@@ -175,7 +175,7 @@ object PyModel {
     */
   /** Serializes py-model builds that touch the SHARED session catalog:
     * user-chosen temp-view names from two models built concurrently
-    * (DagRunner.runParallel) would otherwise race — model B's
+    * (DagRunner.build's worker pool) would otherwise race — model B's
     * createOrReplaceTempView overwriting model A's view between A's
     * registration and A's session.sql read.
     */

@@ -894,24 +894,14 @@ object DagQueries {
     "dag_project_dashboard",
     (s, _) => {
       val proj = SqlReporting.project(today, s)
-      // Threaded materialization (optimization round 14, guide §2.6 —
-      // overlap independent jobs): the project's six reporting models
-      // are one wide independent DAG level, and sequential DagRunner.run
-      // serializes their builds (each a small job whose tail leaves the
-      // other 31 cores idle, PLUS the per-model driver-side Catalyst
-      // analysis, which dominates this row at bench scale and is
-      // single-threaded per model). runParallel is output-identical by
-      // construction (each model depends only on its refs — pinned on
-      // this exact ProjectLoader DAG in ProjectLoaderSpec and on the
-      // compiled DAG in NpoDagSpec); `spark.graft.dagThreads` = 1
-      // restores the sequential runner.
-      val threads = s.conf.get("spark.graft.dagThreads", "4").toInt
+      // The project's six reporting models are one wide independent DAG
+      // level; DagRunner's scheduler overlaps their builds (and each
+      // model's Catalyst analysis, which dominates this row at bench
+      // scale) on its default thread count.
       val resolve = (n: String) =>
         srcDf(s, graft.models.testkit.NpoFixtures.physicalAliases.getOrElse(n, n))
       val wh = s"${sys.props("java.io.tmpdir")}/graft-projwh-${s.sparkContext.applicationId}"
-      val built =
-        if (threads > 1) graft.engine.DagRunner.runParallel(s, proj.models, resolve, wh, threads)
-        else graft.engine.DagRunner.run(s, proj.models, resolve, wh)
+      val built = graft.engine.DagRunner.run(s, proj.models, resolve, wh)
       ordered(built("integral_reporting_dashboard_channel_weekly"))
     },
     dashboard.oracle)

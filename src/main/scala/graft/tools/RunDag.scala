@@ -25,8 +25,9 @@ import graft.models.testkit.NpoFixtures
   *     names sanitized to `_`; schema.yml tests run when --build is
   *     given. `--vars k=v,k2=v2` binds template vars (`today` binds
   *     automatically from the positional date arg).
-  *   Add --threads N to materialize ready models concurrently
-  *     (dbt's `threads:` — `DagRunner.runParallel`).
+  *   Add --threads N to set how many ready models materialize
+  *     concurrently (dbt's `threads:`; by default one per Spark core,
+  *     at most one per model — `DagRunner.build`).
   *   Add --profiles <file> [--target NAME] [--profile NAME] to resolve a
   *     profiles.yml-shaped target config (ProjectLoader.loadProfiles):
   *     the output's name becomes `target.name` in model Jinja, its
@@ -222,8 +223,7 @@ object RunDag {
       graft.engine.ProjectLoader.loadProfiles(
         java.nio.file.Paths.get(pf), pName, targetName)
     }
-    val threads = flagValue("--threads").map(_.toInt)
-      .orElse(profile.map(_.threads)).getOrElse(1)
+    val threads = flagValue("--threads").map(_.toInt).orElse(profile.map(_.threads))
     val project = projectDir.map(pd => graft.engine.ProjectLoader.load(spark,
       java.nio.file.Paths.get(pd),
       vars = userVars ++ Map("today" -> s"DATE '$today'"),
@@ -409,19 +409,18 @@ object RunDag {
           if (warnError) (e ++ w, Nil) else (e, w)
         }
         val report = DagRunner.build(spark, runModels, resolveWithWarehouse, warehouse,
-          errChecks, warnOnly)
+          errChecks, warnOnly, threads)
         report.failures.foreach { case (m, checks) =>
           checks.foreach { case (c, n) => println(s"[rundag] FAIL $m $c: $n violations") }
         }
         report.warnings.foreach { case (m, checks) =>
           checks.foreach { case (c, n) => println(s"[rundag] WARN $m $c: $n violations") }
         }
+        report.errors.foreach { case (m, t) => println(s"[rundag] ERROR $m: $t") }
         report.skipped.foreach(m => println(s"[rundag] SKIP $m (upstream failed)"))
         if (!report.ok) { spark.stop(); sys.exit(1) }
         report.built
-      } else if (threads > 1)
-        DagRunner.runParallel(spark, runModels, resolveWithWarehouse, warehouse, threads)
-      else DagRunner.run(spark, runModels, resolveWithWarehouse, warehouse)
+      } else DagRunner.run(spark, runModels, resolveWithWarehouse, warehouse, threads = threads)
     project.foreach(_.onRunEnd.foreach(spark.sql(_)))
     // persist_docs: after a successful run, write the doc sidecars into
     // the configured models' target directories (dbt persists relation/

@@ -460,7 +460,7 @@ class EngineSpec extends SparkSpec {
       s"${m.name} missing from HTML"))
   }
 
-  test("runParallel overlaps independent models, preserves order, equals run()") {
+  test("build overlaps independent models at threads 4 and equals threads 1") {
     val active = new java.util.concurrent.atomic.AtomicInteger(0)
     val peak = new java.util.concurrent.atomic.AtomicInteger(0)
     def slow(name: String, refs: String*): Model =
@@ -474,23 +474,117 @@ class EngineSpec extends SparkSpec {
     // diamond: base -> (left, right) -> top; left/right must overlap
     val models = Seq(slow("base"), slow("left", "base"), slow("right", "base"),
       slow("top", "left", "right"))
-    val par = DagRunner.runParallel(spark, models, n => sys.error(s"no source $n"),
-      threads = 4)
+    val par = DagRunner.build(spark, models, n => sys.error(s"no source $n"),
+      threads = Some(4)).built
     assert(peak.get() >= 2, "independent models must have run concurrently")
     assert(par("top").count() === 10L) // 2 + left(2+2) + right(2+2) via the unions
-    val seq = DagRunner.run(spark, models, n => sys.error(s"no source $n"))
+    val seq = DagRunner.run(spark, models, n => sys.error(s"no source $n"), threads = Some(1))
     assert(par("top").exceptAll(seq("top")).count() === 0L)
     assert(seq("top").exceptAll(par("top")).count() === 0L)
   }
 
-  test("runParallel propagates the first failure") {
+  test("run at threads 4 propagates the first failure") {
     val models = Seq(m("ok"),
       Model("boom", Seq("ok"), (s, r) => sys.error("deliberate")),
       m("after", "boom"))
     val e = intercept[RuntimeException] {
-      DagRunner.runParallel(spark, models, n => sys.error(s"no source $n"))
+      DagRunner.run(spark, models, n => sys.error(s"no source $n"), threads = Some(4))
     }
     assert(e.getMessage.contains("deliberate"))
+  }
+
+  test("build isolates a model that throws: error recorded, descendants skipped") {
+    // base -> boom (throws) -> leaf; side hangs off base on its own branch.
+    var ran = Set.empty[String]
+    def rec(name: String, refs: String*)(f: => Unit): Model =
+      Model(name, refs, (s, _) => { synchronized(ran += name); f; s.range(2).toDF("k") })
+    val models = Seq(rec("base")(()), rec("boom", "base")(sys.error("deliberate")),
+      rec("leaf", "boom")(()), rec("side", "base")(()))
+    val r = DagRunner.build(spark, models, n => fail(s"unexpected $n"), threads = Some(4))
+    assert(!r.ok)
+    assert(r.errors.keySet === Set("boom"))
+    assert(r.errors("boom").getMessage.contains("deliberate"))
+    assert(r.failures.isEmpty)
+    assert(r.skipped === Seq("leaf"))
+    assert(r.built.keySet === Set("base", "side"), "the independent branch finishes")
+    assert(!ran("leaf"), "a skipped model's builder must never run")
+    // dbt retry reruns the errored model along with its skipped descendants.
+    val results = Files.createTempDirectory("graft-err").resolve("run_results.json").toString
+    DagRunner.writeRunResults(spark, r, results)
+    assert(DagRunner.retrySelection(spark, models, results).map(_.name).toSet === Set("boom", "leaf"))
+  }
+
+  test("build tests selected models only; a full build tests every model") {
+    val wh = Files.createTempDirectory("graft-selected").toString
+    // v (view, k NULL for one row) -> t (table); other is independent.
+    val v = Model("v", Nil, (s, _) => s.range(3).select(when(col("id") > 0, col("id")).as("k")))
+    val t = Model("t", Seq("v"), (s, r) => r("v"), materialization = Table)
+    val other = Model("other", Nil, (s, _) => s.range(1).toDF("k"), materialization = Table)
+    val all = Seq(v, t, other)
+    val notNull = Seq(DataTests.NotNull("v", "k"), DataTests.NotNull("t", "k"))
+    def build(spec: String, checks: Seq[DataTests.Check]) = DagRunner.build(spark,
+      if (spec.isEmpty) all else DagRunner.withLazyUpstreams(all, DagRunner.select(all, spec)),
+      n => fail(s"unexpected $n"), wh, checks)
+    assert(DagRunner.withLazyUpstreams(all, DagRunner.select(all, "t"))
+      .map(m => m.name -> m.selected).toMap === Map("v" -> false, "t" -> true))
+    // `t` selected: the lazily added view is built but not tested.
+    val sel = build("t", notNull)
+    assert(sel.failures.keySet === Set("t"))
+    assert(sel.built.keySet === Set("v"))
+    // No selection: every model is tested.
+    val full = build("", notNull)
+    assert(full.failures.keySet === Set("v"))
+    assert(full.skipped === Seq("t"))
+    // A relationships check runs when either end is selected.
+    val rel = Seq(DataTests.Relationships("v", "k", "other", "k"))
+    assert(build("t other", rel).failures === Map("v" -> Seq(("relationships(k->other.k)", 2L))))
+    assert(build("t", rel).ok, "neither end selected: the check does not run")
+  }
+
+  test("every job of a build carries a job tag naming its model and phase") {
+    val wh = Files.createTempDirectory("graft-tags").toString
+    val models = Seq(
+      Model("a", Nil, (s, _) => s.range(5).toDF("k"), materialization = Table),
+      Model("b", Seq("a"), (s, r) => r("a").filter(col("k") > 1), materialization = Table))
+    val (report, jobs) = SparkSpec.jobsDuring(spark) {
+      DagRunner.build(spark, models, n => fail(s"unexpected $n"), wh,
+        checks = Seq(DataTests.NotNull("a", "k"), DataTests.Unique("b", Seq("k"))), threads = Some(2))
+    }
+    assert(report.get.ok)
+    val tag = "graft:(build|test):([a-z]+):[0-9a-f]+".r
+    val phases = jobs.map { j =>
+      val ours = j.tags.toSeq.collect { case tag(phase, model) => (phase, model) }
+      assert(ours.size === 1, s"job tags ${j.tags}")
+      ours.head
+    }.toSet
+    assert(phases === Set(("build", "a"), ("build", "b"), ("test", "a"), ("test", "b")))
+  }
+
+  test("run cancels the jobs still running by tag and rethrows the first error") {
+    import org.apache.spark.TaskContext
+    val wh = Files.createTempDirectory("graft-cancel").toString
+    // Each task waits up to 60 s unless Spark kills it.
+    val stall = udf((x: Long) => {
+      val t0 = System.nanoTime()
+      while (!TaskContext.get().isInterrupted() && System.nanoTime() - t0 < 60e9) Thread.sleep(20)
+      x
+    })
+    var afterSlow = false
+    val models = Seq(
+      Model("slow", Nil, (s, _) => s.range(0, 2, 1, 2).select(stall(col("id")).as("x")),
+        materialization = Table),
+      Model("after_slow", Seq("slow"), (s, r) => { afterSlow = true; r("slow") }),
+      Model("boom", Nil, (s, _) => { Thread.sleep(1500); sys.error("deliberate") }))
+    val t0 = System.nanoTime()
+    val (result, jobs) = SparkSpec.jobsDuring(spark) {
+      DagRunner.run(spark, models, n => fail(s"unexpected $n"), wh, threads = Some(2))
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(result.failed.get.getMessage.contains("deliberate"), "the first error is rethrown")
+    assert(secs < 30, s"run waited $secs s: the slow model's job was not cancelled")
+    val slowJobs = jobs.filter(_.tags.exists(_.startsWith("graft:build:slow:")))
+    assert(slowJobs.nonEmpty && slowJobs.forall(!_.succeeded))
+    assert(!afterSlow, "no model starts after the first error")
   }
 
   test("a CSV seed materializes as a table, participates in ref(), and fingerprints its bytes") {

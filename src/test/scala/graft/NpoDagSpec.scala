@@ -29,14 +29,16 @@ class NpoDagSpec extends SparkSpec {
       "integral_reporting_dashboard_channel_weekly"))
   }
 
-  test("runParallel materializes the full reference DAG identically to run()") {
+  test("run at threads 4 materializes the full reference DAG identically to threads 1") {
     // The real 13-model graph (views + an incremental table + reporting
-    // fan-out) through the dbt-threads runner: every model's frame must
-    // equal the sequential build's.
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_par").toFile.getAbsolutePath
-    val fixtures = NpoFixtures.all(spark)
-    val par = DagRunner.runParallel(spark, NpoDag.models(NpoFixtures.today),
-      fixtures.apply, wh, threads = 4)
+    // fan-out) on four scheduler threads: every model's frame must
+    // equal the one-thread build's.
+    def at(threads: Int) = DagRunner.run(spark, NpoDag.models(NpoFixtures.today),
+      NpoFixtures.all(spark).apply,
+      java.nio.file.Files.createTempDirectory("graft_wh_par").toFile.getAbsolutePath,
+      threads = Some(threads))
+    val par = at(4)
+    val built = at(1)
     assert(par.keySet === built.keySet)
     par.keySet.foreach { name =>
       assert(par(name).exceptAll(built(name)).count() === 0L, s"$name: extra rows in parallel build")

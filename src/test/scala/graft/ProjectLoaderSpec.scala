@@ -103,20 +103,72 @@ class ProjectLoaderSpec extends SparkSpec {
       "atinternet_smarttag_streams_daily/atinternet_smarttag_streams_daily_v4").isDirectory)
   }
 
-  test("runParallel materializes the file-loaded project identically to run()") {
-    // dag_project_dashboard runs THIS DAG through the threaded runner
-    // (optimization round 14); pin output equality on the file frontend
-    // specifically — its builds register shared-catalog temp views for
-    // every ref, so this covers the concurrent-registration path too.
-    val par = DagRunner.runParallel(spark, proj.models,
-      NpoFixtures.resolveProject(fixtures), tmpWh(), threads = 4)
+  test("run at threads 4 builds the file-loaded project identically to threads 1") {
+    // dag_project_dashboard runs THIS DAG on the scheduler's default
+    // threads; pin output equality on the file frontend specifically —
+    // its builds register shared-catalog temp views for every ref, so
+    // this covers the concurrent-registration path too.
+    val par = DagRunner.run(spark, proj.models,
+      NpoFixtures.resolveProject(fixtures), tmpWh(), threads = Some(4))
     val seq = DagRunner.run(spark, proj.models,
-      NpoFixtures.resolveProject(fixtures), tmpWh())
+      NpoFixtures.resolveProject(fixtures), tmpWh(), threads = Some(1))
     assert(par.keySet === seq.keySet)
     val name = "integral_reporting_dashboard_channel_weekly"
     assert(par(name).columns.toSeq === seq(name).columns.toSeq)
     assert(par(name).exceptAll(seq(name)).count() === 0L)
     assert(seq(name).exceptAll(par(name)).count() === 0L)
+  }
+
+  test("a streams+ refresh after a full build is the same at threads 4 and 1") {
+    // The daily job: a full build at D0, then the incremental streams
+    // model and everything downstream of it at D0+1.
+    val streams = "atinternet_smarttag_streams_daily_v4"
+    val d1 = java.sql.Date.valueOf(NpoFixtures.today.toLocalDate.plusDays(1))
+    def day(threads: Int) = {
+      val wh = tmpWh()
+      val p0 = SqlReporting.project(NpoFixtures.today, spark)
+      val full = DagRunner.build(spark, p0.models, NpoFixtures.resolveProject(fixtures), wh,
+        p0.checks, p0.warnChecks, Some(threads))
+      val p1 = SqlReporting.project(d1, spark)
+      val sel = DagRunner.withLazyUpstreams(p1.models, DagRunner.select(p1.models, s"$streams+"))
+      val refresh = DagRunner.build(spark, sel, NpoFixtures.resolveProject(fixtures), wh,
+        p1.checks, p1.warnChecks, Some(threads))
+      val target = spark.read.parquet(DagRunner.targetPath(wh, p1.model(streams)))
+      (full, refresh, target)
+    }
+    val (full4, refresh4, target4) = day(4)
+    val (full1, refresh1, target1) = day(1)
+    assert(full4.ok && refresh4.ok, s"${refresh4.failures} ${refresh4.errors}")
+    for ((a, b) <- Seq(full4 -> full1, refresh4 -> refresh1)) {
+      assert(a.built.keySet === b.built.keySet)
+      assert(a.failures === b.failures)
+      assert(a.warnings === b.warnings)
+      assert(a.skipped === b.skipped)
+    }
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame, what: String) = {
+      assert(a.exceptAll(b).count() === 0L, s"$what: extra rows at threads 4")
+      assert(b.exceptAll(a).count() === 0L, s"$what: missing rows at threads 4")
+    }
+    Seq("poms_flattened", "integral_reporting_tvbroadcasts", "integral_reporting_youtube",
+      "integral_reporting_sites_and_apps").foreach(v => same(refresh4.built(v), refresh1.built(v), v))
+    same(target4, target1, streams)
+  }
+
+  test("the insert_overwrite partition list folds without a Spark job") {
+    val (loaded, jobs) = SparkSpec.jobsDuring(spark)(SqlReporting.project(NpoFixtures.today, spark))
+    assert(jobs.isEmpty, s"${jobs.size} Spark jobs while loading the project")
+    assert(loaded.get.model("atinternet_smarttag_streams_daily_v4").materialization ===
+      IncrementalInsertOverwrite("evt_date", StreamsDaily.partitionsFor(NpoFixtures.today)))
+    // A non-deterministic entry does not fold: the list is evaluated by
+    // one Spark job instead.
+    val dir = synthProject("models/inc.sql" ->
+      ("""{% set parts = ['CAST(date_add(DATE("2021-01-01"), 1) AS STRING)', 'CAST(spark_partition_id() AS STRING)'] %}""" +
+        "{{ config(materialized='incremental', incremental_strategy='insert_overwrite', " +
+        "partition_by='d', partitions = parts) }}\nSELECT 1 AS x, '2021-01-02' AS d"))
+    val (synth, synthJobs) = SparkSpec.jobsDuring(spark)(ProjectLoader.load(spark, dir))
+    assert(synth.get.model("inc").materialization ===
+      IncrementalInsertOverwrite("d", Seq("2021-01-02", "0")))
+    assert(synthJobs.size === 1)
   }
 
   // ---- unit: config resolution and schema.yml parsing --------------------
