@@ -498,37 +498,6 @@ object DagRunner {
     models.filter(m => rerun(m.name))
   }
 
-  /** dbt `clone`: point the target environment at the state
-    * environment's data WITHOUT rebuilding — the CI-promote idiom.
-    * Parquet has no zero-copy view, so this is a file-level copy of
-    * each table-family model's target dir (a server-side copy on
-    * object stores); views and ephemerals have no on-disk form and are
-    * skipped, exactly as dbt clones only materialized relations.
-    * Returns the cloned names.
-    */
-  def cloneModels(spark: SparkSession, models: Seq[Model],
-                  fromWarehouse: String, toWarehouse: String,
-                  overwrite: Boolean = false): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    models.filter(m => m.materialization != View && m.materialization != Ephemeral)
-      .flatMap { m =>
-        val src = new org.apache.hadoop.fs.Path(targetPath(fromWarehouse, m))
-        val dst = new org.apache.hadoop.fs.Path(targetPath(toWarehouse, m))
-        val sfs = src.getFileSystem(conf)
-        val dfs = dst.getFileSystem(conf)
-        if (!sfs.exists(src)) None
-        else {
-          if (dfs.exists(dst)) {
-            require(overwrite, s"clone target ${dst} exists — pass overwrite=true to replace")
-            dfs.delete(dst, true)
-          }
-          dfs.mkdirs(dst.getParent)
-          org.apache.hadoop.fs.FileUtil.copy(sfs, src, dfs, dst, false, conf)
-          Some(m.name)
-        }
-      }
-  }
-
   /** dbt `compile`: write each SQL-text model's fully-rendered SQL to
     * `<dir>/<name>.sql` (the `target/compiled/` artifact reviewers and
     * lineage tools read). Refs appear as their registered
@@ -811,17 +780,6 @@ object DagRunner {
     }.groupBy(_._1).map { case (base, vs) => base -> vs.maxBy(_._2)._3 }
     models.map(m => m.copy(refs = m.refs.map(r => latest.getOrElse(r, r))))
   }
-
-  /** dbt `--empty`: a schema-only dry run — every EXTERNAL input is
-    * truncated to zero rows (`LIMIT 0`) before the DAG builds, so the
-    * whole pipeline executes, materializes empty-but-typed targets,
-    * and trips schema errors and contract violations at near-zero
-    * cost. Exactly dbt's flag: only ref/source INPUTS are limited; the
-    * model bodies run unmodified.
-    */
-  def runEmpty(spark: SparkSession, models: Seq[Model], resolve: String => DataFrame,
-               warehouse: String = ""): Map[String, DataFrame] =
-    run(spark, models, n => resolve(n).limit(0), warehouse)
 
   /** `dbt run`: [[build]] without data tests and with `failFast`; the
     * first error is rethrown. `resolve` supplies external sources (the
@@ -1220,35 +1178,6 @@ object DagRunner {
     if (reads.exists(r => r == qualified || r.startsWith(qualified + "/")))
       df.localCheckpoint(true)
     else df
-  }
-
-  /** `dbt run` + `dbt test`: materialize the WHOLE DAG, then execute
-    * the declared [[DataTests.Check]]s against the MATERIALIZED outputs
-    * (tests see what the warehouse sees, not the pre-write plan).
-    * Returns the frames plus the test summary; `failFast = true`
-    * throws on the first violated check — the CI posture — with the
-    * violating rows count in the message. For dbt build's INTERLEAVED
-    * semantics (each model tested immediately after it materializes, a
-    * failure skipping its descendants so they never build on bad
-    * data), use [[build]].
-    */
-  def runWithTests(spark: SparkSession, models: Seq[Model],
-      resolve: String => DataFrame, warehouse: String,
-      checks: Seq[DataTests.Check], failFast: Boolean = true)
-      : (Map[String, DataFrame], DataFrame) = {
-    val built = run(spark, models, resolve, warehouse)
-    def look(n: String): DataFrame = built.getOrElse(n, resolve(n))
-    val summary = DataTests.run(look, checks)
-    if (failFast) {
-      val bad = summary.filter(org.apache.spark.sql.functions.col("n_violations") > 0)
-        .collect()
-      if (bad.nonEmpty) {
-        val msg = bad.map(r => s"${r.getAs[String]("test")}(${r.getAs[String]("model")}." +
-          s"${r.getAs[String]("column")}): ${r.getAs[Long]("n_violations")}").mkString("; ")
-        throw new IllegalStateException(s"data tests failed: $msg")
-      }
-    }
-    (built, summary)
   }
 
   /** The microbatch batch list: every day from `begin` (first run /

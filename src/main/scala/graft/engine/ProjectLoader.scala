@@ -10,9 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * out like the reference project (`/root/reference/dbt_project.yml`,
   * `models/` (recursive) with `.sql` models and `sources.yml`/`schema.yml`
   * declarations, optional `macros/` SQL files) and get back a runnable DAG —
-  * no Scala wiring. This closes the last parity gap VERDICT r10 named:
-  * previously the YAML files' CONTENT was mirrored in Scala
-  * (`models/NpoDag.scala`); now the files themselves are the input.
+  * no Scala wiring: the files themselves are the input. The reference's
+  * own DAG runs this way (`graft.models.SqlReporting`).
   *
   * What is parsed from where (all reference line cites):
   *   - `dbt_project.yml:1` project `name`; `:4-11` the `models:` config

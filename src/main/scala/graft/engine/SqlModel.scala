@@ -17,12 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Design choices vs dbt/Jinja:
   *   - The SQL dialect is Spark SQL (the engine's native dialect), not
-  *     BigQuery — same policy as the Scala model ports, which re-express
-  *     the reference's BigQuery constructs with `graft.dialect.Dialect`
-  *     semantics. `SqlModelSpec` proves the six reporting models
-  *     authored as Spark-SQL text produce frame-identical output to the
-  *     compiled builders (which are DuckDB-oracled end-to-end via the
-  *     `dag_*` rows).
+  *     BigQuery: the reference project's text ports re-express its
+  *     BigQuery constructs with `graft.dialect.Dialect` semantics and are
+  *     DuckDB-oracled end-to-end via the `dag_*` rows.
   *   - Full Jinja (loops, macros) is out of scope; `{{ config(...) }}`
   *     headers are stripped (materialization is declared engine-side),
   *     `{{ var('x') }}` substitutes from a caller map at parse time —
@@ -123,9 +120,8 @@ object SqlModel {
 
   /** Upstream names referenced by the template: `ref('x')` contributes
     * `x`; `source('s','t')` contributes `t` (sources resolve by bare
-    * table name through `DagRunner.run`'s resolve callback, the same
-    * namespace `NpoDag.sources` uses). Order of first appearance,
-    * deduplicated.
+    * table name through `DagRunner.run`'s resolve callback). Order of
+    * first appearance, deduplicated.
     */
   def extractRefs(sqlText: String): Seq[String] = {
     val hits = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
@@ -967,6 +963,7 @@ object SqlModel {
         // Warehouse-introspection macros (dbt_utils.star /
         // get_column_values) deferred to this moment, where every ref
         // is a registered temp view ([[CatalogMacros]]).
+        FusionRules.setup(spark)
         spark.sql(CatalogMacros.expand(spark, finalSql))
       },
       mat, sch, db, alias = alias, fingerprint = Some(fp),

@@ -1378,13 +1378,9 @@ object DedupOps {
           val cur2 = step(prev)
             .join(prev.select(col("doc_id"), col("pr").as("pr_prev")), Seq("doc_id"))
             .select(col("doc_id"), col("n_docs"), col("pr_prev"), col("pr"))
-          val blockT0 = System.nanoTime()
           val (cp, dirs) = reliableCheckpoint(cur2)
           rounds += k
           delta = cp.agg(sum(abs(col("pr") - col("pr_prev")))).head().getLong(0)
-          if (s.conf.get("spark.graft.pagerankConvDebug", "false").toBoolean)
-            println(f"[pagerank_loop] block k=$k rounds=$rounds delta=$delta " +
-              f"${(System.nanoTime() - blockT0) / 1e9}%.1f s")
           prev.unpersist(blocking = false)
           deleteCkptDirs(s, prDirs)
           pr = cp.drop("pr_prev")
@@ -1762,17 +1758,10 @@ object DedupOps {
           preCleaned = true)
         (r.select("doc_id", "n_docs", "pr", "degree"), d)
       } else {
-        val dbg = s.conf.get("spark.graft.pagerankConvDebug", "false").toBoolean
-        var t0 = System.nanoTime()
-        def lap(phase: String): Unit = if (dbg) {
-          println(f"[pagerank_conv] $phase: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-          t0 = System.nanoTime()
-        }
         val nTotal = docs.agg(count(lit(1))).head().getLong(0)
         val assign = connectedComponents(connectivity.getOrElse(cleanPairs))
           .persist(StorageLevel.MEMORY_AND_DISK)
         assign.count()
-        lap("cc")
         try {
           // Component choice: the cross-check samples the LARGEST
           // component whose directed edges fit
@@ -1804,16 +1793,8 @@ object DedupOps {
               if (underBudget.nonEmpty) underBudget
               else counts.orderBy(col("ne").asc, col("comp")).limit(k)
                 .select("comp").as[Long].collect()
-            if (dbg) {
-              val pickedNe = counts.filter(col("comp").isin(picked.toSeq: _*))
-                .agg(sum("ne")).head().getLong(0)
-              // Diagnostic only (gated): the sampled subgraph's size is
-              // the loop's per-round cost driver.
-              println(s"[pagerank_conv] sampled comps=${picked.mkString(",")} pairs=$pickedNe")
-            }
             picked.toSet
           } finally counts.unpersist(blocking = false)
-          lap("selection")
           // bigDocs is CHECKPOINTED, not just cached: the block loop's
           // plans embed the docs subtree ~5× per round and Catalyst
           // re-ANALYZES the growing chain at every step() — with the CC
@@ -1833,14 +1814,12 @@ object DedupOps {
             val bigPairs = checkpointSlot("pagerank_conv_big",
               cleanPairs.join(
                 bigDocs.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "leftsemi"))
-            lap("big_pairs_ckpt")
             // bigPairs is endpoint-complete w.r.t. bigDocs by the CC
             // contract (a pair's endpoints share a component), so the
             // in-function cleaning pass is redundant.
             val (rBig, _, d) =
               pagerankConvergedStats(bigDocs, bigPairs, eps, nOverride = Some(nTotal),
                 forceDistributed = true, preCleaned = true)
-            lap("sampled_loop")
             val restDocs = docs.join(bigDocs, Seq("doc_id"), "left_anti")
             val restPairs = cleanPairs.join(
               bigDocs.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
@@ -1854,7 +1833,6 @@ object DedupOps {
               pagerankComponents(restDocs, restPairs, eps,
                 nOverride = Some(nTotal), precomputedAssign = Some(restAssign),
                 preCleaned = true))
-            lap("rest_checkpoint")
             (rBig.select("doc_id", "n_docs", "pr", "degree")
               .unionAll(rRest.select("doc_id", "n_docs", "pr", "degree")), d)
           }

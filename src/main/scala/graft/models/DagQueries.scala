@@ -37,6 +37,22 @@ object DagQueries {
     s.read.parquet(NpoParquet.model(name))
   }
 
+  /** Build one model of the checked-in text project (`fixtures/npo_project`,
+    * loaded by [[graft.engine.ProjectLoader]]) over the fixture parquet:
+    * a ref to another substantive model reads that model's materialized
+    * output, every other ref (the passthroughs) reads its source table, so
+    * each row isolates exactly one model's transform. `inputs` overrides
+    * single refs.
+    */
+  private def textModel(s: SparkSession, name: String,
+      inputs: PartialFunction[String, DataFrame] = PartialFunction.empty): DataFrame = {
+    val m = SqlReporting.project(today, s).model(name)
+    val upstream: String => DataFrame = inputs.applyOrElse(_, (r: String) =>
+      if (SqlReporting.allNames.contains(r)) modelDf(s, r)
+      else srcDf(s, NpoFixtures.physicalAliases.getOrElse(r, r)))
+    m.build(s, m.refs.map(r => r -> upstream(r)).toMap)
+  }
+
   /** Deterministic total order over every output column (the driver's
     * hash is row-order-sensitive); DuckDB side mirrors with
     * `ORDER BY ALL NULLS FIRST` (Spark's asc-nulls-first default).
@@ -44,8 +60,8 @@ object DagQueries {
   private def ordered(df: DataFrame): DataFrame =
     df.orderBy(df.columns.toIndexedSeq.map(col): _*)
 
-  /** DuckDB ISO-week spine matching `Reporting.weekSpine` (reference
-    * GENERATE_DATE_ARRAY('2018-12-31', CURRENT_DATE(), INTERVAL 1 WEEK)).
+  /** DuckDB ISO-week spine (reference GENERATE_DATE_ARRAY('2018-12-31',
+    * CURRENT_DATE(), INTERVAL 1 WEEK)).
     */
   private val spineSql =
     s"SELECT CAST(unnest(generate_series(DATE '2018-12-31', DATE '$today', INTERVAL 7 DAY)) AS DATE) AS weekdate"
@@ -57,8 +73,7 @@ object DagQueries {
     */
   private val pomsFlattened = QueryDef(
     "dag_poms_flattened",
-    (s, _) => ordered(
-      PomsFlattened.build(srcDf(s, "audiovisual_metadata_poms_metadata_v1"))),
+    (s, _) => ordered(textModel(s, "poms_flattened")),
     Some(s"""WITH poms AS (SELECT * FROM ${srcq("audiovisual_metadata_poms_metadata_v1")}),
        |e1 AS (SELECT id AS mid, type, sort_date, duration, age_rating,
        |  descendant_of, member_of, genres, schedule_events, broadcasters,
@@ -118,10 +133,7 @@ object DagQueries {
     */
   private val tvBroadcasts = QueryDef(
     "dag_tvbroadcasts",
-    (s, _) => ordered(Reporting.tvBroadcasts(s,
-      srcDf(s, "advantedge_tv_viewer_density_per_show_daily_v1"),
-      srcDf(s, "dim_poms_episodes"),
-      srcDf(s, "360_graden_rapportage_vertaaltabel_upload_20_21"), today)),
+    (s, _) => ordered(textModel(s, "integral_reporting_tvbroadcasts")),
     Some(s"""WITH tv_ep AS (
        |  SELECT title, date, mediaId,
        |    poms.series_ref AS poms_series_id, poms.series_title AS poms_series_title, channel,
@@ -162,11 +174,9 @@ object DagQueries {
     */
   private val youtube = QueryDef(
     "dag_youtube",
-    (s, _) => {
-      val latest = NpoDag.latestYoutube(s, srcDf(s, "src_quintly_youtube_v1"))
-      ordered(Reporting.youtube(s,
-        srcDf(s, "360_graden_rapportage_vertaaltabel_upload_20_21"), latest, today))
-    },
+    (s, _) => ordered(textModel(s, "integral_reporting_youtube", {
+      case latest @ "quintly_youtube_allchannels_weekly" => textModel(s, latest)
+    })),
     Some(s"""WITH yt AS (
        |  SELECT * EXCLUDE (partitionDate) FROM ${srcq("src_quintly_youtube_v1")}
        |  WHERE partitionDate = (SELECT MAX(partitionDate) FROM ${srcq("src_quintly_youtube_v1")})),
@@ -191,9 +201,7 @@ object DagQueries {
   /** `integral_reporting_facebook.sql:1-23`. */
   private val facebook = QueryDef(
     "dag_facebook",
-    (s, _) => ordered(Reporting.facebook(s,
-      srcDf(s, "360_graden_rapportage_vertaaltabel_upload_20_21"),
-      srcDf(s, "quintly_facebook_pages_weekly"), today)),
+    (s, _) => ordered(textModel(s, "integral_reporting_facebook")),
     Some(s"""WITH vertaal AS (SELECT * FROM ${srcq("360_graden_rapportage_vertaaltabel_upload_20_21")} WHERE Naam IS NOT NULL)
        |SELECT v.Target_FB_pagelikes, v.Target_FB_reachperpost, v.QL_FB_ID, weekdate,
        |  date_part('week', weekdate) AS weeknr, date_part('isoyear', weekdate) AS year,
@@ -210,9 +218,7 @@ object DagQueries {
   /** `integral_reporting_instagram.sql:1-24`. */
   private val instagram = QueryDef(
     "dag_instagram",
-    (s, _) => ordered(Reporting.instagram(s,
-      srcDf(s, "360_graden_rapportage_vertaaltabel_upload_20_21"),
-      srcDf(s, "quintly_instagram_pages_weekly"), today)),
+    (s, _) => ordered(textModel(s, "integral_reporting_instagram")),
     Some(s"""WITH vertaal AS (SELECT * FROM ${srcq("360_graden_rapportage_vertaaltabel_upload_20_21")} WHERE Naam IS NOT NULL)
        |SELECT v.Target_IG_followers, v.Target_IG_reachperpost, v.QL_IG_ID, weekdate,
        |  date_part('week', weekdate) AS weeknr, date_part('isoyear', weekdate) AS year,
@@ -230,10 +236,7 @@ object DagQueries {
     */
   private val sitesAndApps = QueryDef(
     "dag_sites_and_apps",
-    (s, _) => ordered(Reporting.sitesAndApps(s,
-      srcDf(s, "360_graden_rapportage_vertaaltabel_upload_20_21"),
-      srcDf(s, "atinternet_smarttag_pages_weekly_v2"),
-      srcDf(s, "atinternet_smarttag_pages_programmes_weekly_v2"), today)),
+    (s, _) => ordered(textModel(s, "integral_reporting_sites_and_apps")),
     Some(s"""WITH ati AS (
        |  SELECT level_2, platform, weekdate AS ati_weekdate, weeknum, year,
        |    weekly_visitors, daily_visitors, visits
@@ -260,27 +263,21 @@ object DagQueries {
 
   // ------------------------------------------------------- streams_daily
 
-  /** String-typed window list: DuckDB 1.0 mis-evaluates
-    * `ts_col::DATE IN (DATE ...)` (returns false), so the oracle compares
-    * date STRINGS — which is also exactly what the Spark side does
-    * (`StreamsDaily.build`'s `cast("date").cast("string").isin`).
+  /** The reference's rolling window, today-8 .. today, as date strings:
+    * DuckDB 1.0 mis-evaluates `ts_col::DATE IN (DATE ...)` (returns
+    * false), so the oracle compares date STRINGS — which is also exactly
+    * what the model text does (`CAST(CAST(.. AS DATE) AS STRING) IN`).
     */
   private val partsSql =
-    StreamsDaily.partitionsFor(today).map(d => s"'$d'").mkString(", ")
+    (0 to 8).map(i => s"'${today.toLocalDate.minusDays(i)}'").mkString(", ")
 
   /** `atinternet_smarttag_streams_daily_v4.sql:24-244` — minute-densified
     * livestream as-of matching, payload split/clean, stream→day rollup,
-    * POMS metadata enrichment. Window list pinned to
-    * `StreamsDaily.partitionsFor(2021-01-12)` in both engines.
+    * POMS metadata enrichment, with `today` 2021-01-12 in both engines.
     */
   private val streamsDaily = QueryDef(
     "dag_streams_daily",
-    (s, _) => ordered(StreamsDaily.build(
-      srcDf(s, "advantedge_tv_viewer_density_per_show_daily_v1"),
-      srcDf(s, "media_events"),
-      srcDf(s, "live_stream_name_mapping_v1"),
-      srcDf(s, "audiovisual_metadata_poms_metadata_v1"),
-      StreamsDaily.partitionsFor(today))),
+    (s, _) => ordered(textModel(s, "atinternet_smarttag_streams_daily_v4")),
     Some(s"""WITH adv_src AS (SELECT * FROM ${srcq("advantedge_tv_viewer_density_per_show_daily_v1")}),
        |me AS (SELECT * FROM ${srcq("media_events")}),
        |mapping AS (SELECT * FROM ${srcq("live_stream_name_mapping_v1")}),
@@ -413,12 +410,7 @@ object DagQueries {
     */
   private val vodStreaming = QueryDef(
     "dag_vodstreaming",
-    (s, _) => ordered(Reporting.vodStreaming(s,
-      srcDf(s, "advantedge_tv_viewer_density_per_show_daily_v1"),
-      modelDf(s, "poms_flattened"),
-      modelDf(s, "atinternet_smarttag_streams_daily_v4"),
-      srcDf(s, "dim_poms_episodes"),
-      srcDf(s, "360_graden_rapportage_vertaaltabel_upload_20_21"), today)),
+    (s, _) => ordered(textModel(s, "integral_reporting_vodstreaming")),
     Some(s"""WITH adv AS (SELECT * FROM ${srcq("advantedge_tv_viewer_density_per_show_daily_v1")}),
        |pf AS (SELECT * FROM ${modelq("poms_flattened")}),
        |sd AS (SELECT * FROM ${modelq("atinternet_smarttag_streams_daily_v4")}),
@@ -550,14 +542,7 @@ object DagQueries {
     */
   private val dashboard = QueryDef(
     "dag_dashboard",
-    (s, _) => ordered(Dashboard.build(s,
-      srcDf(s, "360_graden_rapportage_vertaaltabel_upload_20_21"),
-      modelDf(s, "integral_reporting_vodstreaming"),
-      modelDf(s, "integral_reporting_tvbroadcasts"),
-      modelDf(s, "integral_reporting_facebook"),
-      modelDf(s, "integral_reporting_instagram"),
-      modelDf(s, "integral_reporting_sites_and_apps"),
-      modelDf(s, "integral_reporting_youtube"), today)),
+    (s, _) => ordered(textModel(s, "integral_reporting_dashboard_channel_weekly")),
     Some(s"""WITH vertaal AS (SELECT * FROM ${srcq("360_graden_rapportage_vertaaltabel_upload_20_21")}),
        |vod AS (SELECT * FROM ${modelq("integral_reporting_vodstreaming")}),
        |tvb AS (SELECT * FROM ${modelq("integral_reporting_tvbroadcasts")}),
@@ -736,79 +721,6 @@ object DagQueries {
        |       ELSE 'avg lineaire KDH >= 100.000 and < 4.0000.000' END AS lineair_kdh_bucket
        |FROM u
        |ORDER BY ALL NULLS FIRST""".stripMargin))
-
-  // ------------------------------------------------- SQL-text frontend
-
-  /** Build one reporting model through the SQL-TEXT path: the `.sql`
-    * resource via [[graft.engine.SqlModel]] (templating → temp views →
-    * `spark.sql`), inputs wired by the refs the template itself
-    * declares.
-    */
-  private def sqlTextModel(s: SparkSession, name: String,
-      inputs: Map[String, DataFrame]): DataFrame = {
-    val m = SqlReporting.allModels(today).find(_.name == name)
-      .getOrElse(throw new IllegalArgumentException(s"no SQL-text model $name"))
-    m.build(s, m.refs.map(r => r -> inputs(r)).toMap)
-  }
-
-  /** `dag_youtube`'s oracle re-run against the SQL-TEXT frontend — the
-    * simplest reporting model proving the text path (ref extraction,
-    * view registration, var injection) end-to-end against DuckDB, not
-    * merely spec-equivalent to the compiled builder.
-    */
-  private val sqlYoutube = QueryDef(
-    "dag_sql_youtube",
-    (s, _) => ordered(sqlTextModel(s, "integral_reporting_youtube", Map(
-      "360_graden_rapportage_vertaaltabel_upload_20_21" ->
-        srcDf(s, "360_graden_rapportage_vertaaltabel_upload_20_21"),
-      "quintly_youtube_allchannels_weekly" ->
-        NpoDag.latestYoutube(s, srcDf(s, "src_quintly_youtube_v1"))))),
-    youtube.oracle)
-
-  /** `dag_vodstreaming`'s oracle against the SQL-TEXT frontend — the
-    * most complex reporting model (window functions, 90-day release
-    * rule, typed-NULL union branches) through the same text path.
-    */
-  private val sqlVodStreaming = QueryDef(
-    "dag_sql_vodstreaming",
-    (s, _) => ordered(sqlTextModel(s, "integral_reporting_vodstreaming", Map(
-      "advantedge_tv_viewer_density_per_show_daily_v1" ->
-        srcDf(s, "advantedge_tv_viewer_density_per_show_daily_v1"),
-      "poms_flattened" -> modelDf(s, "poms_flattened"),
-      "atinternet_smarttag_streams_daily_v4" ->
-        modelDf(s, "atinternet_smarttag_streams_daily_v4"),
-      "dim_poms_episodes" -> srcDf(s, "dim_poms_episodes"),
-      "360_graden_rapportage_vertaaltabel_upload_20_21" ->
-        srcDf(s, "360_graden_rapportage_vertaaltabel_upload_20_21")))),
-    vodStreaming.oracle)
-
-  /** `dag_poms_flattened`'s oracle against the SQL-TEXT frontend — the
-    * five stacked LATERAL VIEW OUTER explodes + positional broadcaster
-    * explode through the text path (VERDICT r7 #3).
-    */
-  private val sqlPomsFlattened = QueryDef(
-    "dag_sql_poms_flattened",
-    (s, _) => ordered(sqlTextModel(s, "poms_flattened", Map(
-      "audiovisual_metadata_poms_metadata_v1" ->
-        srcDf(s, "audiovisual_metadata_poms_metadata_v1")))),
-    pomsFlattened.oracle)
-
-  /** `dag_streams_daily`'s oracle against the SQL-TEXT frontend — the
-    * incremental model whose reference authoring needs Jinja
-    * `{% set %}` list + `| join` partition templating (VERDICT r7 #3):
-    * proves the templating renders the SAME rolling window the compiled
-    * builder computes, end-to-end against DuckDB.
-    */
-  private val sqlStreamsDaily = QueryDef(
-    "dag_sql_streams_daily",
-    (s, _) => ordered(sqlTextModel(s, "atinternet_smarttag_streams_daily_v4", Map(
-      "advantedge_tv_viewer_density_per_show_daily_v1" ->
-        srcDf(s, "advantedge_tv_viewer_density_per_show_daily_v1"),
-      "media_events" -> srcDf(s, "media_events"),
-      "live_stream_name_mapping_v1" -> srcDf(s, "live_stream_name_mapping_v1"),
-      "audiovisual_metadata_poms_metadata_v1" ->
-        srcDf(s, "audiovisual_metadata_poms_metadata_v1")))),
-    streamsDaily.oracle)
 
   // ---------------------------------------------------------------- seeds
 
@@ -1291,8 +1203,7 @@ object DagQueries {
 
   val all: Seq[QueryDef] = Seq(
     pomsFlattened, tvBroadcasts, youtube, facebook, instagram, sitesAndApps,
-    streamsDaily, vodStreaming, dashboard, sqlYoutube, sqlVodStreaming,
-    sqlPomsFlattened, sqlStreamsDaily, seedRollup, sqlMacroPricing,
+    streamsDaily, vodStreaming, dashboard, seedRollup, sqlMacroPricing,
     sqlIfPricing, projectDashboard, microbatchDaily,
     pkgDateSpine, pkgPivot, pkgForPivot, pkgPySummary, pkgSurrogateKey, pkgUnionRelations, pkgEnvVar,
     pkgDateMath, pkgStar, pkgPivotDynamic, pkgSingularTests, pkgFreshness,

@@ -4,29 +4,25 @@ import java.sql.Date
 
 import org.apache.spark.sql.SparkSession
 
-import graft.engine.{Model, ProjectLoader}
+import graft.engine.ProjectLoader
 
-/** EVERY non-empty reference model authored as SQL TEXT (dbt's authoring
-  * surface), loaded from the checked-in PROJECT DIRECTORY
-  * `fixtures/npo_project` — a byte-for-byte mirror of the reference
-  * layout (`dbt_project.yml`, `models/source/...`, `models/datamarts/
+/** The reference's 13-model NPO DAG, authored as SQL TEXT (dbt's
+  * authoring surface) in the checked-in PROJECT DIRECTORY
+  * `fixtures/npo_project` — a mirror of the reference layout
+  * (`dbt_project.yml`, `models/source/...`, `models/datamarts/
   * npo-data-hub/...`, `sources.yml`, `schema.yml`) whose `.sql` bodies
-  * are the engine's Spark-SQL dialect ports. Since round 11 the models
-  * come through [[graft.engine.ProjectLoader]] — the dbt path end to
-  * end: files in, DAG out, no Scala wiring. Refs are extracted from the
-  * text, so the DAG wiring below cannot drift from the SQL bodies.
+  * are the engine's Spark-SQL dialect ports. The models come through
+  * [[graft.engine.ProjectLoader]] — the dbt path end to end: files in,
+  * DAG out, no Scala wiring; refs are extracted from the text.
   *
   * The project tree holds all 20 reference model files: the ten
   * substantive models listed in [[allNames]] plus the ten one-line
-  * BigQuery passthroughs ("sources in disguise", SURVEY §3.3) that
-  * [[ProjectLoader]] turns into external refs under their physical
-  * dotted names (`NpoFixtures.physicalAliases` maps those to fixtures).
-  *
-  * `SqlModelSpec` proves each SQL-text model frame-equivalent to the
-  * compiled builders, which are themselves DuckDB-oracled end-to-end via
-  * the `dag_*` rows; `dag_sql_*` rows additionally pin the text-path
-  * models directly against DuckDB, and `ProjectLoaderSpec` re-runs the
-  * whole file-frontend DAG against the compiled builders.
+  * BigQuery passthroughs ("sources in disguise", SURVEY §3.3) that read
+  * physical dotted table names (`NpoFixtures.physicalAliases` maps those
+  * to fixtures). The `dag_*` rows pin each substantive model against an
+  * independent DuckDB port of the reference SQL, and `RunDag` runs this
+  * project when no `--project` is given. Two reference idioms the text
+  * keeps verbatim are planned cheaply by [[graft.engine.FusionRules]].
   */
 object SqlReporting {
 
@@ -38,9 +34,7 @@ object SqlReporting {
     "integral_reporting_instagram",
     "integral_reporting_sites_and_apps")
 
-  /** The four models beyond the reporting layer that also ship as SQL
-    * text (VERDICT r7 #3).
-    */
+  /** The four substantive models beyond the reporting layer. */
   val extraNames: Seq[String] = Seq(
     "quintly_youtube_allchannels_weekly",
     "poms_flattened",
@@ -66,30 +60,4 @@ object SqlReporting {
   def project(today: Date,
               spark: SparkSession = SparkSession.active): ProjectLoader.DbtProject =
     ProjectLoader.load(spark, projectDir, vars = Map("today" -> s"DATE '$today'"))
-
-  /** The reporting layer from SQL text. */
-  def models(today: Date): Seq[Model] = {
-    val p = project(today)
-    names.map(p.model)
-  }
-
-  /** All ten substantive SQL-text models. Materialization and routing
-    * now derive from the FILES (config headers + dbt_project.yml): the
-    * incremental model's partition list is the loader's evaluation of
-    * the `partitions = partitions_to_replace` header against the
-    * `{% set %}` list — `ProjectLoaderSpec` pins it equal to
-    * `StreamsDaily.partitionsFor(today)`.
-    */
-  def allModels(today: Date): Seq[Model] = {
-    val p = project(today)
-    allNames.map(p.model)
-  }
-
-  /** The full NPO DAG with EVERY non-source model swapped to its
-    * SQL-text form — the complete dbt authoring path through one runner.
-    */
-  def dagModels(today: Date): Seq[Model] = {
-    val swapped = allNames.toSet
-    NpoDag.models(today).filterNot(m => swapped(m.name)) ++ allModels(today)
-  }
 }

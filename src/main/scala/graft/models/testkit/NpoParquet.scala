@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 import graft.engine.DagRunner
-import graft.models.NpoDag
+import graft.models.SqlReporting
 
 /** Persist the NPO fixtures (and every DAG model output) as parquet so
   * the DAG models can be ORACLE-checked end-to-end: the Spark side and
@@ -15,8 +15,8 @@ import graft.models.NpoDag
   *
   * Layout under [[dir]]:
   *   - `src_<source>.parquet`   — the 11 external source tables
-  *   - `model_<model>.parquet`  — each materialized model output (inputs
-  *     for downstream models' oracles)
+  *   - `model_<model>.parquet`  — each substantive model's output from the
+  *     text project (inputs for downstream models' oracles)
   *
   * Writes are guarded by a version marker so repeated `Verify`/`Bench`
   * runs skip the rebuild; bump [[version]] whenever fixture CONTENT or a
@@ -29,7 +29,7 @@ object NpoParquet {
     */
   val dir: String = "/root/repo/fixtures/npo"
 
-  val version: String = "v2"
+  val version: String = "v3"
 
   def src(name: String): String = s"$dir/src_$name.parquet"
   def model(name: String): String = s"$dir/model_$name.parquet"
@@ -44,13 +44,15 @@ object NpoParquet {
     fixtures.foreach { case (name, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(src(name))
     }
-    // Run the full DAG off the just-written source parquet (not the
-    // in-memory frames) so every model output derives from the same
-    // bytes the oracles read.
-    val built = DagRunner.run(spark, NpoDag.models(NpoFixtures.today),
-      name => spark.read.parquet(src(name)), s"$dir/warehouse")
-    built.foreach { case (name, df) =>
-      df.coalesce(1).write.mode("overwrite").parquet(model(name))
+    // Run the full text project off the just-written source parquet (not
+    // the in-memory frames) so every model output derives from the same
+    // bytes the oracles read; the passthrough views are sources, not
+    // model outputs.
+    val built = DagRunner.run(spark, SqlReporting.project(NpoFixtures.today, spark).models,
+      name => spark.read.parquet(src(NpoFixtures.physicalAliases.getOrElse(name, name))),
+      s"$dir/warehouse")
+    SqlReporting.allNames.foreach { name =>
+      built(name).coalesce(1).write.mode("overwrite").parquet(model(name))
     }
     Files.createFile(marker)
     checked = true

@@ -5,24 +5,28 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.engine.DagRunner
-import graft.models.NpoDag
+import graft.models.SqlReporting
 import graft.models.testkit.NpoFixtures
 
-/** The `dbt run` equivalent: materialize the full 13-model reference DAG.
+/** The `dbt run` equivalent: materialize a dbt project's DAG, by default
+  * the checked-in reference project `fixtures/npo_project` (the 13-model
+  * NPO DAG as SQL text, `graft.models.SqlReporting`).
   *
   * Usage:
   *   runMain graft.tools.RunDag --demo
   *     runs over the built-in deterministic fixtures into a temp
   *     warehouse and prints per-model row counts + a dashboard sample.
   *   runMain graft.tools.RunDag <sourcesDir> <warehouse> [todayYYYY-MM-DD]
-  *     reads each source as <sourcesDir>/<name>.parquet (names per
-  *     `NpoDag.sources`) and materializes into <warehouse>.
-  *   Add --project <dir> to load the DAG from a dbt PROJECT DIRECTORY
-  *     (`dbt_project.yml` + `models/` — `graft.engine.ProjectLoader`)
-  *     instead of the compiled `NpoDag` wiring: the dropped-in-project
-  *     path. External refs (declared sources and physical table names)
-  *     read <sourcesDir>/<name>.parquet, with dots/spaces in physical
-  *     names sanitized to `_`; schema.yml tests run when --build is
+  *     reads each external ref as <sourcesDir>/<name>.parquet and
+  *     materializes into <warehouse>. The default project's physical
+  *     table names map to the fixture names (`media_events`,
+  *     `dim_poms_episodes`, ...) through `NpoFixtures.physicalAliases`.
+  *   Add --project <dir> to load the DAG from another dbt PROJECT
+  *     DIRECTORY (`dbt_project.yml` + `models/` —
+  *     `graft.engine.ProjectLoader`): the dropped-in-project path.
+  *     External refs (declared sources and physical table names) read
+  *     <sourcesDir>/<name>.parquet, with dots/spaces in physical names
+  *     sanitized to `_`. Either way, schema.yml tests run when --build is
   *     given. `--vars k=v,k2=v2` binds template vars (`today` binds
   *     automatically from the positional date arg).
   *   Add --threads N to set how many ready models materialize
@@ -59,7 +63,7 @@ import graft.models.testkit.NpoFixtures
   *     the build instead of merely reporting (dbt --warn-error).
   *   Add --list to print the selected node names in dependency order
   *     and stop (dbt ls) — composes with --select/--selector/--exclude.
-  *   Add --snapshot (with --project) to run the project's snapshots/
+  *   Add --snapshot to run the project's snapshots/
   *     blocks into their SCD2 targets and stop (dbt `snapshot`); the
   *     check strategy stamps --as-of 'YYYY-MM-DD HH:MM:SS' as
   *     dbt_valid_from (injectable, never wall-clock).
@@ -72,7 +76,7 @@ import graft.models.testkit.NpoFixtures
   *     full SQL executes and relations materialize with real schemas
   *     and no data (the CI dry run for broken SQL and contract drift).
   *
-  *   With --project, `unit_tests:` declared in the project YAML run
+  *   `unit_tests:` declared in the project YAML run
   *     BEFORE anything materializes and abort the run on failure
   *     (dbt build's ordering).
   */
@@ -92,7 +96,9 @@ object RunDag {
       "--select and --selector are mutually exclusive (dbt's own rule)")
     val excludeSpec = flagValue("--exclude")
     val doBuild = args0.contains("--build")
+    // The checked-in reference project unless --project names another.
     val projectDir = flagValue("--project")
+    val projectPath = projectDir.map(java.nio.file.Paths.get(_)).getOrElse(SqlReporting.projectDir)
     val userVars: Map[String, String] = flagValue("--vars").map(
       _.split(",").filter(_.nonEmpty).map { kv =>
         val Array(k, v) = kv.split("=", 2)
@@ -114,8 +120,6 @@ object RunDag {
     val warnError = args0.contains("--warn-error")
     val listMode = args0.contains("--list")
     val asOfFlag = flagValue("--as-of")
-    require(!snapshotMode || projectDir.isDefined,
-      "--snapshot requires --project <dir> (snapshots/ lives in the project)")
     // dbt run-operation: expand a project/package macro standalone and
     // execute the rendered SQL (--args pastes verbatim into the call
     // parens). dbt prints only what the macro logs; the engine prints
@@ -125,8 +129,6 @@ object RunDag {
     val opArgs = flagValue("--args")
     require(opArgs.isEmpty || runOperation.isDefined,
       "--args requires --run-operation <macro>")
-    require(runOperation.isEmpty || projectDir.isDefined,
-      "--run-operation requires --project <dir> (macros live in the project)")
     // dbt show: build the selected model's closure and print a row
     // preview instead of a full run.
     val showModel = flagValue("--show")
@@ -182,24 +184,23 @@ object RunDag {
       if (args.headOption.contains("--demo")) {
         val fixtures = NpoFixtures.all(spark)
         val wh = Files.createTempDirectory("graft_demo_wh").toFile.getAbsolutePath
-        // Under --project, external refs are the dropped-in project's
-        // physical table names — route them through the alias table.
-        val res: String => org.apache.spark.sql.DataFrame =
-          if (projectDir.isDefined) NpoFixtures.resolveProject(fixtures)
-          else fixtures.apply _
-        (res, wh, NpoFixtures.today)
+        // External refs are the project's physical table names — route
+        // them through the alias table.
+        (NpoFixtures.resolveProject(fixtures) _, wh, NpoFixtures.today)
       } else {
         val Array(src, wh) = args.take(2)
         val today = args.lift(2).map(java.sql.Date.valueOf)
           .getOrElse(new java.sql.Date(System.currentTimeMillis()))
         // A physical ref like `npo-data-hub.analytics.media_events`
         // maps to a sanitized parquet basename when the verbatim one
-        // does not exist on disk.
+        // does not exist on disk; the default project's physical names
+        // map to the fixture names first.
+        val aliases = if (projectDir.isEmpty) NpoFixtures.physicalAliases else Map.empty[String, String]
         val res = (n: String) => {
           val conf = spark.sparkContext.hadoopConfiguration
           // A QUALIFIED source key (`tpch.orders`) falls back to the bare
           // table basename — the sources dir holds one parquet per table.
-          val cands = Seq(n, n.replaceAll("[^A-Za-z0-9_]", "_"),
+          val cands = Seq(aliases.getOrElse(n, n), n, n.replaceAll("[^A-Za-z0-9_]", "_"),
               n.substring(n.lastIndexOf('.') + 1)).distinct
             .map(b => s"$src/$b.parquet")
           val found = cands.find { c =>
@@ -211,29 +212,24 @@ object RunDag {
         (res, wh, today)
       }
 
-    // --project loads the DAG (and its schema.yml tests) from a dbt
-    // project directory through the file frontend; otherwise the
-    // compiled NpoDag wiring runs.
+    // The DAG and its schema.yml tests load from the project directory
+    // through the file frontend.
     val profile = profilesFile.map { pf =>
       val pName = profileName
-        .orElse(projectDir.flatMap(pd =>
-          graft.engine.ProjectLoader.profileNameOf(java.nio.file.Paths.get(pd))))
+        .orElse(graft.engine.ProjectLoader.profileNameOf(projectPath))
         .getOrElse(throw new IllegalArgumentException(
           "--profiles needs --profile NAME (or a project with a profile: key)"))
       graft.engine.ProjectLoader.loadProfiles(
         java.nio.file.Paths.get(pf), pName, targetName)
     }
     val threads = flagValue("--threads").map(_.toInt).orElse(profile.map(_.threads))
-    val project = projectDir.map(pd => graft.engine.ProjectLoader.load(spark,
-      java.nio.file.Paths.get(pd),
+    val project = graft.engine.ProjectLoader.load(spark, projectPath,
       vars = userVars ++ Map("today" -> s"DATE '$today'"),
-      profile = profile))
+      profile = profile)
     // Selection resolution (dbt order): --select wins; --selector looks
     // up the project's selectors.yml; with neither, a `default: true`
     // selector applies (dbt's default-selector behavior).
-    val selectors = projectDir.map(pd =>
-      graft.engine.ProjectLoader.loadSelectors(java.nio.file.Paths.get(pd)))
-      .getOrElse(Nil)
+    val selectors = graft.engine.ProjectLoader.loadSelectors(projectPath)
     val selectSpec: Option[String] = selectFlag.orElse {
       selectorName.map { sn =>
         selectors.find(_.name == sn).map(_.definition).getOrElse(
@@ -242,13 +238,10 @@ object RunDag {
               s"(defined: ${selectors.map(_.name).sorted.mkString(", ")})"))
       }
     }.orElse(selectors.find(_.default).map(_.definition))
-    require(selectorName.isEmpty || projectDir.isDefined,
-      "--selector requires --project <dir> (selectors.yml lives in the project)")
     // Versioned-model pre-pass (dbt 1.5): unpinned refs to a versioned
     // family resolve to its latest version before selection, so
     // `--select +consumer` pulls the right version's subtree.
-    val allModels = DagRunner.resolveVersionRefs(
-      project.map(_.models).getOrElse(NpoDag.models(today)))
+    val allModels = DagRunner.resolveVersionRefs(project.models)
     // Under --select, unselected TABLE-family upstreams resolve from the
     // warehouse of a previous full run (dbt's contract — they persist);
     // VIEW and EPHEMERAL upstreams have no on-disk form, so their
@@ -258,7 +251,7 @@ object RunDag {
     val models = selectSpec.map { spec =>
       DagRunner.withLazyUpstreams(allModels,
         DagRunner.select(allModels, spec, excludeSpec.getOrElse(""),
-          exposures = project.map(_.exposures).getOrElse(Nil)))
+          exposures = project.exposures))
     }.getOrElse(allModels)
     // Unselected table-family upstreams resolve from the dev warehouse,
     // or — under --defer — fall back to the deferred environment's
@@ -297,14 +290,13 @@ object RunDag {
     // namespace; vars/env resolve exactly as they would inside a model.
     if (runOperation.isDefined) {
       val opName = runOperation.get
-      val p = project.get
-      require(p.macroDefs.contains(opName) || p.nativeMacroDefs.contains(opName),
+      require(project.macroDefs.contains(opName) || project.nativeMacroDefs.contains(opName),
         s"--run-operation: macro '$opName' is not defined " +
-          s"(known: ${(p.macroDefs.keySet ++ p.nativeMacroDefs.keySet).toSeq.sorted.mkString(", ")})")
+          s"(known: ${(project.macroDefs.keySet ++ project.nativeMacroDefs.keySet).toSeq.sorted.mkString(", ")})")
       val call = s"{{ $opName(${opArgs.getOrElse("")}) }}"
       val rendered = graft.engine.SqlModel.substituteEnvVars(
         graft.engine.SqlModel.substituteVars(
-          graft.engine.SqlModel.expandMacros(call, p.macroDefs, p.nativeMacroDefs),
+          graft.engine.SqlModel.expandMacros(call, project.macroDefs, project.nativeMacroDefs),
           userVars))
       // Resolve relation call sites exactly as a model build would:
       // sources through the source resolver, refs through the model's
@@ -363,7 +355,7 @@ object RunDag {
       // upstream subtrees withLazyUpstreams pulls in for execution.
       val listed = selectSpec.map(spec =>
         DagRunner.select(allModels, spec, excludeSpec.getOrElse(""),
-          exposures = project.map(_.exposures).getOrElse(Nil))).getOrElse(allModels)
+          exposures = project.exposures)).getOrElse(allModels)
       graft.engine.DagRunner.topoSort(listed).foreach(m => println(m.name))
       spark.stop()
       return
@@ -375,7 +367,7 @@ object RunDag {
       // from the warehouse (dbt resolves ref() to the target table), not
       // a source file that happens to share the model's basename;
       // view/ephemeral refs build in-process via stateResolve.
-      val snapped = project.get.runSnapshots(spark, stateResolve, warehouse, asOfFlag)
+      val snapped = project.runSnapshots(spark, stateResolve, warehouse, asOfFlag)
       snapped.toSeq.sortBy(_._1).foreach { case (n, df) =>
         println(s"[rundag] snapshot $n: ${df.count()} rows") }
       spark.stop()
@@ -384,8 +376,8 @@ object RunDag {
     // unit_tests: run BEFORE anything materializes and abort on
     // failure — dbt build's ordering (a model with broken logic never
     // reaches the warehouse).
-    project.map(_.unitTests).filter(_.nonEmpty).foreach { uts =>
-      val results = DagRunner.runUnitTests(spark, allModels, uts)
+    if (project.unitTests.nonEmpty) {
+      val results = DagRunner.runUnitTests(spark, allModels, project.unitTests)
       results.foreach(r =>
         println(s"[rundag] unit test ${r.name}: ${if (r.passed) "PASS" else "FAIL"}"))
       val failed = results.filterNot(_.passed)
@@ -395,7 +387,7 @@ object RunDag {
     // Project run hooks (dbt_project.yml on-run-start/on-run-end):
     // start before the first model; end only after a SUCCESSFUL run —
     // DagRunner.run's own hook contract.
-    project.foreach(_.onRunStart.foreach(spark.sql(_)))
+    project.onRunStart.foreach(spark.sql(_))
     // dbt run --empty: every model's inputs (refs AND sources) build
     // with LIMIT 0 — the full DAG executes schema-only.
     val runModels = if (emptyMode) DagRunner.withEmptyInputs(models) else models
@@ -404,9 +396,8 @@ object RunDag {
         // dbt --warn-error: warn-severity tests fail the build instead
         // of merely reporting.
         val (errChecks, warnOnly) = {
-          val e = project.map(_.checks).getOrElse(NpoDag.defaultChecks)
-          val w = project.map(_.warnChecks).getOrElse(Nil)
-          if (warnError) (e ++ w, Nil) else (e, w)
+          if (warnError) (project.checks ++ project.warnChecks, Nil)
+          else (project.checks, project.warnChecks)
         }
         val report = DagRunner.build(spark, runModels, resolveWithWarehouse, warehouse,
           errChecks, warnOnly, threads)
@@ -421,27 +412,27 @@ object RunDag {
         if (!report.ok) { spark.stop(); sys.exit(1) }
         report.built
       } else DagRunner.run(spark, runModels, resolveWithWarehouse, warehouse, threads = threads)
-    project.foreach(_.onRunEnd.foreach(spark.sql(_)))
+    project.onRunEnd.foreach(spark.sql(_))
     // persist_docs: after a successful run, write the doc sidecars into
     // the configured models' target directories (dbt persists relation/
     // column comments as part of `dbt run`). Scoped to the models this
     // run actually built — under --select, a sidecar for an unbuilt
     // model would create an empty target directory that a later
     // incremental run mistakes for existing state.
-    project.foreach(_.persistDocsSidecars(spark, warehouse, built.keySet.toSet)
-      .foreach(p => println(s"[rundag] persisted docs: $p")))
+    project.persistDocsSidecars(spark, warehouse, built.keySet.toSet)
+      .foreach(p => println(s"[rundag] persisted docs: $p"))
     built.toSeq.sortBy(_._1).foreach { case (name, df) =>
       println(f"[rundag] $name%-45s ${df.count()}%8d rows")
     }
     println(s"[rundag] warehouse: $warehouse")
     docsDir.foreach { dd =>
       DagRunner.writeDocs(spark, allModels, s"$dd/docs.json",
-        exposures = project.map(_.exposures).getOrElse(Nil),
-        descriptions = project.map(_.descriptions).getOrElse(Map.empty),
-        columnDescriptions = project.map(_.columnDescriptions).getOrElse(Map.empty))
+        exposures = project.exposures,
+        descriptions = project.descriptions,
+        columnDescriptions = project.columnDescriptions)
       DagRunner.writeDocsSite(spark, allModels, dd,
-        exposures = project.map(_.exposures).getOrElse(Nil),
-        descriptions = project.map(_.descriptions).getOrElse(Map.empty))
+        exposures = project.exposures,
+        descriptions = project.descriptions)
       println(s"[rundag] docs: $dd/docs.json, $dd/lineage.dot, $dd/index.html")
     }
     built.get("integral_reporting_dashboard_channel_weekly").foreach(

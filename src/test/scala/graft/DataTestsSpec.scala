@@ -47,29 +47,23 @@ class DataTestsSpec extends SparkSpec {
     assert(out.forall(_.getAs[Long]("n_violations") === 0L))
   }
 
-  test("runWithTests: dbt-build posture — DAG materializes, then tests gate") {
+  test("build: dbt-build posture — DAG materializes, then tests gate") {
     import graft.engine.{DagRunner, Model}
     val wh = java.nio.file.Files.createTempDirectory("graft_dt").toFile.getAbsolutePath
-    def mkModels = {
-      import spark.implicits._
-      Seq(Model("dup_out", Seq.empty,
-        (s, _) => { import s.implicits._; Seq(1, 1, 2).toDF("k") },
-        graft.engine.Table))
-    }
-    // failing unique check on the materialized output throws with detail
-    val e = intercept[IllegalStateException] {
-      DagRunner.runWithTests(spark, mkModels, n => sys.error(s"no source $n"),
-        wh, Seq(Unique("dup_out", Seq("k"))))
-    }
-    assert(e.getMessage.contains("unique(dup_out.k): 1"))
-    // failFast = false returns the summary instead
-    val (built, summary) = DagRunner.runWithTests(spark, mkModels,
-      n => sys.error(s"no source $n"), wh,
-      Seq(Unique("dup_out", Seq("k")), NotNull("dup_out", "k")), failFast = false)
-    assert(built.contains("dup_out"))
-    val m = summary.collect()
-      .map(r => r.getAs[String]("test") -> r.getAs[Long]("n_violations")).toMap
-    assert(m("unique") === 1L && m("not_null") === 0L)
+    val dupOut = Model("dup_out", Seq.empty,
+      (s, _) => { import s.implicits._; Seq(1, 1, 2).toDF("k") },
+      graft.engine.Table)
+    val report = DagRunner.build(spark, Seq(dupOut), n => sys.error(s"no source $n"),
+      wh, checks = Seq(Unique("dup_out", Seq("k")), NotNull("dup_out", "k")))
+    // the failing unique check gates the model; the passing not_null does not report
+    assert(!report.ok)
+    assert(report.failures.keySet === Set("dup_out"))
+    val failed = report.failures("dup_out")
+    assert(failed.map(_._2) === Seq(1L))
+    assert(failed.head._1.startsWith("unique"))
+    assert(!failed.exists(_._1.startsWith("not_null")))
+    // the table was materialized before its tests ran
+    assert(spark.read.parquet(DagRunner.targetPath(wh, dupOut)).count() === 3L)
   }
 
   test("unique excludes NULL keys, mirroring dbt's generated test SQL") {

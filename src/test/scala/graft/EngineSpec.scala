@@ -140,20 +140,6 @@ class EngineSpec extends SparkSpec {
       "a green build leaves nothing to retry")
   }
 
-  test("clone copies table-family targets across warehouses without rebuilding (dbt clone)") {
-    val prod = Files.createTempDirectory("graft-cloneprod").toString
-    val dev = Files.createTempDirectory("graft-clonedev").toString
-    val t = Model("t1", Nil, (s, _) => s.range(4).toDF("x"), materialization = Table)
-    val v = Model("v1", Seq("t1"), (s, r) => r("t1"))
-    DagRunner.run(spark, Seq(t, v), n => fail(s"unexpected $n"), prod)
-    val cloned = DagRunner.cloneModels(spark, Seq(t, v), prod, dev)
-    assert(cloned === Seq("t1"), "views have no on-disk form to clone")
-    assert(spark.read.parquet(s"$dev/main/main/t1").count() === 4)
-    // Refusal without overwrite; success with it.
-    intercept[IllegalArgumentException](DagRunner.cloneModels(spark, Seq(t), prod, dev))
-    assert(DagRunner.cloneModels(spark, Seq(t), prod, dev, overwrite = true) === Seq("t1"))
-  }
-
   test("incremental append: runs accumulate rows; full-refresh rebuilds; partition_by shapes the layout") {
     val wh = Files.createTempDirectory("graft-app").toString
     def batch(n: Int): Model = Model("events_log", Nil,
@@ -217,19 +203,19 @@ class EngineSpec extends SparkSpec {
     assert(DagRunner.run(spark, Seq(core.copy(access = "public"), outsider),
       n => fail(s"unexpected $n"), wh)("finance_mart").count() === 3)
     intercept[IllegalArgumentException](core.copy(access = "open"))
-    // --empty: external inputs limit to 0 rows, the DAG still builds
+    // --empty: every input limits to 0 rows, the DAG still builds
     // typed targets, and contract violations trip at near-zero cost.
     import spark.implicits._
     val src = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
     val tbl = Model("emptied", Seq("ext"), (s, r) => r("ext"), materialization = Table)
-    val out = DagRunner.runEmpty(spark, Seq(tbl), Map("ext" -> src), wh)
+    val out = DagRunner.run(spark, DagRunner.withEmptyInputs(Seq(tbl)), Map("ext" -> src), wh)
     assert(out("emptied").count() === 0)
     assert(out("emptied").schema.fieldNames.toSeq === Seq("id", "name"),
       "an empty run must still materialize the full typed schema")
     val broken = tbl.copy(name = "emptied2",
       contract = Seq(ColumnContract("id", "STRING")))
     val e2 = intercept[IllegalArgumentException](
-      DagRunner.runEmpty(spark, Seq(broken), Map("ext" -> src), wh))
+      DagRunner.run(spark, DagRunner.withEmptyInputs(Seq(broken)), Map("ext" -> src), wh))
     assert(e2.getMessage.contains("contract violated"))
   }
 
@@ -405,7 +391,7 @@ class EngineSpec extends SparkSpec {
   test("writeDocs emits valid JSON lineage for the real 13-model DAG") {
     val docsPath = Files.createTempDirectory("graft-docs")
       .resolve("docs.json").toString
-    val models = graft.models.NpoDag.models(graft.models.testkit.NpoFixtures.today)
+    val models = graft.models.SqlReporting.project(graft.models.testkit.NpoFixtures.today, spark).models
     DagRunner.writeDocs(spark, models, docsPath)
     val body = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(docsPath)), "UTF-8")
@@ -433,7 +419,7 @@ class EngineSpec extends SparkSpec {
 
   test("writeDocsSite renders the real DAG: DOT with every node+edge, standalone SVG HTML") {
     val dir = Files.createTempDirectory("graft-docsite").toString
-    val models = graft.models.NpoDag.models(graft.models.testkit.NpoFixtures.today)
+    val models = graft.models.SqlReporting.project(graft.models.testkit.NpoFixtures.today, spark).models
     val exp = Exposure("weekly_dash", "dashboard",
       Seq("integral_reporting_dashboard_channel_weekly"), owner = "bi")
     DagRunner.writeDocsSite(spark, models, dir, Seq(exp))
@@ -442,7 +428,7 @@ class EngineSpec extends SparkSpec {
     assert(dot.startsWith("digraph lineage {"))
     // Every model is a box node; every external source a cylinder.
     models.foreach(m => assert(dot.contains(s""""${m.name}" [shape=box];"""), m.name))
-    assert(dot.contains(""""dim_poms_episodes" [shape=cylinder];"""))
+    assert(dot.contains(""""npo-data-hub.looker.poms_episodes_materialized" [shape=cylinder];"""))
     assert(dot.contains(""""weekly_dash" [shape=ellipse, style=dashed];"""))
     // Every ref is an edge, exposures hang off their dependencies.
     models.foreach(m => m.refs.foreach(r =>

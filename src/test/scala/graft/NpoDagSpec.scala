@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.DagRunner
-import graft.models.NpoDag
+import graft.engine.{DagRunner, SqlModel}
+import graft.models.SqlReporting
 import graft.models.testkit.NpoFixtures
 
-/** Golden end-to-end test of the 13-model reference DAG over the
-  * NPO-shaped fixtures (SURVEY.md §5.3 / §7.2 M4).
+/** Golden end-to-end test of the 13-model reference DAG — the checked-in
+  * text project — over the NPO-shaped fixtures (SURVEY.md §5.3 / §7.2 M4).
   */
 class NpoDagSpec extends SparkSpec {
 
@@ -16,11 +16,14 @@ class NpoDagSpec extends SparkSpec {
 
   private lazy val built = {
     val fixtures = NpoFixtures.all(spark)
-    DagRunner.run(spark, NpoDag.models(NpoFixtures.today), fixtures.apply, warehouse)
+    DagRunner.run(spark, SqlReporting.project(NpoFixtures.today, spark).models,
+      NpoFixtures.resolveProject(fixtures), warehouse)
   }
 
   test("full DAG materializes all 10 models") {
-    assert(built.keySet === Set(
+    // Next to the ten passthrough views over the physical source tables.
+    assert(built.size === 20)
+    assert(built.keySet.filter(SqlReporting.allNames.contains) === Set(
       "quintly_youtube_allchannels_weekly", "poms_flattened",
       "atinternet_smarttag_streams_daily_v4", "integral_reporting_tvbroadcasts",
       "integral_reporting_vodstreaming", "integral_reporting_youtube",
@@ -33,16 +36,17 @@ class NpoDagSpec extends SparkSpec {
     // The real 13-model graph (views + an incremental table + reporting
     // fan-out) on four scheduler threads: every model's frame must
     // equal the one-thread build's.
-    def at(threads: Int) = DagRunner.run(spark, NpoDag.models(NpoFixtures.today),
-      NpoFixtures.all(spark).apply,
+    def at(threads: Int) = DagRunner.run(spark,
+      SqlReporting.project(NpoFixtures.today, spark).models,
+      NpoFixtures.resolveProject(NpoFixtures.all(spark)),
       java.nio.file.Files.createTempDirectory("graft_wh_par").toFile.getAbsolutePath,
       threads = Some(threads))
     val par = at(4)
-    val built = at(1)
-    assert(par.keySet === built.keySet)
+    val seq = at(1)
+    assert(par.keySet === seq.keySet)
     par.keySet.foreach { name =>
-      assert(par(name).exceptAll(built(name)).count() === 0L, s"$name: extra rows in parallel build")
-      assert(built(name).exceptAll(par(name)).count() === 0L, s"$name: missing rows in parallel build")
+      assert(par(name).exceptAll(seq(name)).count() === 0L, s"$name: extra rows in parallel build")
+      assert(seq(name).exceptAll(par(name)).count() === 0L, s"$name: missing rows in parallel build")
     }
   }
 
@@ -151,7 +155,6 @@ class NpoDagSpec extends SparkSpec {
   }
 
   test("multi-day incremental replay converges to the from-scratch build") {
-    import graft.models.StreamsDaily
     // Replay the DAG's one incremental model across three consecutive
     // injected "todays" against ONE warehouse — the production cadence:
     // each run insert-overwrites its rolling 9-day window, older
@@ -167,17 +170,25 @@ class NpoDagSpec extends SparkSpec {
     // wrote, so preservation is actually exercised, not vacuous.
     val days = Seq("2021-01-12", "2021-01-15", "2021-01-18").map(java.sql.Date.valueOf)
     val incName = "atinternet_smarttag_streams_daily_v4"
-    days.foreach { d =>
-      val inc = NpoDag.models(d).filter(_.name == incName)
-      DagRunner.run(spark, inc, fixtures.apply, wh)
-    }
-    val path = s"$wh/${NpoDag.database}/atinternet_smarttag_streams_daily/$incName"
-    val replayed = spark.read.parquet(path)
-    val unionWindow = days.flatMap(StreamsDaily.partitionsFor).distinct
-    val scratch = StreamsDaily.build(
-      fixtures("advantedge_tv_viewer_density_per_show_daily_v1"),
-      fixtures("media_events"), fixtures("live_stream_name_mapping_v1"),
-      fixtures("audiovisual_metadata_poms_metadata_v1"), unionWindow)
+    def window(d: java.sql.Date) = (0 to 8).map(i => d.toLocalDate.minusDays(i).toString)
+    val inc = days.map { d =>
+      val m = SqlReporting.project(d, spark).model(incName)
+      DagRunner.run(spark, Seq(m), fixtures.apply, wh)
+      m
+    }.last
+    val replayed = spark.read.parquet(DagRunner.targetPath(wh, inc))
+    // From scratch: the same model text with the union of the three
+    // windows as its partition list, built in one pass.
+    val unionWindow = days.flatMap(window).distinct
+    val text = java.nio.file.Files.readString(SqlReporting.projectDir.resolve(
+      s"models/datamarts/npo-data-hub/intermediary/$incName.sql"))
+    val setList = "(?s)\\{% set partitions_to_replace = \\[.*?\\] %\\}"
+    assert(setList.r.findFirstIn(text).isDefined, "the model's partition list must be present")
+    val scratchModel = SqlModel.fromSqlText(incName, text.replaceFirst(setList,
+      java.util.regex.Matcher.quoteReplacement(unionWindow.map(d => s"""'"$d"'""")
+        .mkString("{% set partitions_to_replace = [", ", ", "] %}"))),
+      vars = Map("today" -> s"DATE '${days.last}'"))
+    val scratch = scratchModel.build(spark, scratchModel.refs.map(r => r -> fixtures(r)).toMap)
     // Hash-compare on a canonical projection: same column set (partition
     // read-back reorders evt_date), dates as strings, total row order.
     def canon(df: org.apache.spark.sql.DataFrame) = {
@@ -189,7 +200,7 @@ class NpoDagSpec extends SparkSpec {
     assert(canon(replayed) === canon(scratch))
     // And the replay really did retain partitions the FINAL window no
     // longer covers (written by the first run, preserved since).
-    val finalWindow = StreamsDaily.partitionsFor(days.last).toSet
+    val finalWindow = window(days.last).toSet
     val retained = replayed.select(col("evt_date").cast("string")).distinct()
       .collect().map(_.getString(0)).filterNot(finalWindow)
     assert(retained.nonEmpty,

@@ -3,21 +3,25 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.engine.{DagRunner, DataTests, IncrementalInsertOverwrite, ProjectLoader, Table, View}
-import graft.models.{NpoDag, SqlReporting, StreamsDaily}
+import graft.models.SqlReporting
 import graft.models.testkit.NpoFixtures
 
 /** The dbt PROJECT-DIRECTORY frontend over the checked-in
   * `fixtures/npo_project` tree (a layout mirror of `/root/reference`):
   * YAML parsing, config-precedence routing, source/physical-table
   * resolution, incremental-header evaluation, schema.yml test routing,
-  * and the load-bearing proof — the ENTIRE 20-model file-loaded DAG is
-  * frame-identical to the compiled builders that the `dag_*` DuckDB
-  * rows pin end-to-end.
+  * and the ENTIRE 20-model file-loaded DAG built and tested (dbt build),
+  * the same at four scheduler threads as at one. The `dag_*` DuckDB rows
+  * pin each model's output end-to-end.
   */
 class ProjectLoaderSpec extends SparkSpec {
 
   private lazy val fixtures = NpoFixtures.all(spark)
   private lazy val proj = SqlReporting.project(NpoFixtures.today, spark)
+
+  /** The reference's rolling window at `today` 2021-01-12: today-8 .. today. */
+  private val window = Seq("2021-01-12", "2021-01-11", "2021-01-10", "2021-01-09",
+    "2021-01-08", "2021-01-07", "2021-01-06", "2021-01-05", "2021-01-04")
 
   private def tmpWh(): String =
     java.nio.file.Files.createTempDirectory("graft_projwh").toFile.getAbsolutePath
@@ -62,7 +66,7 @@ class ProjectLoaderSpec extends SparkSpec {
     proj.model("atinternet_smarttag_streams_daily_v4").materialization match {
       case IncrementalInsertOverwrite(col, parts) =>
         assert(col === "evt_date")
-        assert(parts === StreamsDaily.partitionsFor(NpoFixtures.today))
+        assert(parts === window)
       case other => fail(s"expected IncrementalInsertOverwrite, got $other")
     }
   }
@@ -84,39 +88,22 @@ class ProjectLoaderSpec extends SparkSpec {
     assert(report.built.size === 20)
   }
 
-  test("every file-loaded model is frame-identical to the compiled builder DAG") {
-    val wh = tmpWh()
-    val fileBuilt = DagRunner.run(spark, proj.models,
-      NpoFixtures.resolveProject(fixtures), wh)
-    val scalaBuilt = DagRunner.run(spark, NpoDag.models(NpoFixtures.today),
-      fixtures.apply, tmpWh())
-    scalaBuilt.keys.foreach { name =>
-      val a = fileBuilt(name)
-      val b = scalaBuilt(name)
-      assert(a.columns.toSeq === b.columns.toSeq, s"$name columns")
-      assert(a.exceptAll(b).count() === 0L, s"$name: extra rows via file frontend")
-      assert(b.exceptAll(a).count() === 0L, s"$name: missing rows via file frontend")
-    }
-    // Routing lands on disk where the Scala wiring put it: the
-    // incremental model under its own database+schema.
-    assert(new java.io.File(s"$wh/mit-reporting-test-1/" +
-      "atinternet_smarttag_streams_daily/atinternet_smarttag_streams_daily_v4").isDirectory)
-  }
-
   test("run at threads 4 builds the file-loaded project identically to threads 1") {
-    // dag_project_dashboard runs THIS DAG on the scheduler's default
-    // threads; pin output equality on the file frontend specifically —
-    // its builds register shared-catalog temp views for every ref, so
-    // this covers the concurrent-registration path too.
+    // The real 13-model graph (views + an incremental table + reporting
+    // fan-out), which dag_project_dashboard runs on the scheduler's
+    // default threads: every model's frame must equal the one-thread
+    // build's. Its builds register shared-catalog temp views for every
+    // ref, so this covers the concurrent-registration path too.
     val par = DagRunner.run(spark, proj.models,
       NpoFixtures.resolveProject(fixtures), tmpWh(), threads = Some(4))
     val seq = DagRunner.run(spark, proj.models,
       NpoFixtures.resolveProject(fixtures), tmpWh(), threads = Some(1))
     assert(par.keySet === seq.keySet)
-    val name = "integral_reporting_dashboard_channel_weekly"
-    assert(par(name).columns.toSeq === seq(name).columns.toSeq)
-    assert(par(name).exceptAll(seq(name)).count() === 0L)
-    assert(seq(name).exceptAll(par(name)).count() === 0L)
+    par.keySet.foreach { name =>
+      assert(par(name).columns.toSeq === seq(name).columns.toSeq, name)
+      assert(par(name).exceptAll(seq(name)).count() === 0L, s"$name: extra rows at threads 4")
+      assert(seq(name).exceptAll(par(name)).count() === 0L, s"$name: missing rows at threads 4")
+    }
   }
 
   test("a streams+ refresh after a full build is the same at threads 4 and 1") {
@@ -158,7 +145,7 @@ class ProjectLoaderSpec extends SparkSpec {
     val (loaded, jobs) = SparkSpec.jobsDuring(spark)(SqlReporting.project(NpoFixtures.today, spark))
     assert(jobs.isEmpty, s"${jobs.size} Spark jobs while loading the project")
     assert(loaded.get.model("atinternet_smarttag_streams_daily_v4").materialization ===
-      IncrementalInsertOverwrite("evt_date", StreamsDaily.partitionsFor(NpoFixtures.today)))
+      IncrementalInsertOverwrite("evt_date", window))
     // A non-deterministic entry does not fold: the list is evaluated by
     // one Spark job instead.
     val dir = synthProject("models/inc.sql" ->

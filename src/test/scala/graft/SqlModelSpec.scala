@@ -4,15 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{DagRunner, Ephemeral, SqlModel, Table}
-import graft.models.{NpoDag, SqlReporting}
+import graft.models.SqlReporting
 import graft.models.testkit.NpoFixtures
 
-/** The SQL-text model frontend: templating unit tests plus the
-  * load-bearing equivalence proof — the six reporting models authored as
-  * Spark-SQL text must produce FRAME-IDENTICAL output to the compiled
-  * `Reporting` builders (which the `dag_*` DuckDB oracle rows pin
-  * end-to-end), including the downstream dashboard built on top of them
-  * in a mixed Scala/SQL DAG.
+/** The SQL-text model frontend: templating, `is_incremental()` /
+  * `{{ this }}`, config headers and conditionals, down to a re-authoring
+  * of the reference's incremental streams model (the `dag_*` DuckDB
+  * oracle rows pin the text models themselves end-to-end).
   */
 class SqlModelSpec extends SparkSpec {
 
@@ -277,13 +275,7 @@ class SqlModelSpec extends SparkSpec {
     assert(e.getMessage.contains("cycle"))
   }
 
-  // ---- equivalence with the compiled (oracle-pinned) builders -----------
-
   private lazy val fixtures = NpoFixtures.all(spark)
-  private lazy val scalaBuilt = DagRunner.run(spark, NpoDag.models(NpoFixtures.today),
-    fixtures.apply, tmpWh())
-  private lazy val sqlBuilt = DagRunner.run(spark, SqlReporting.dagModels(NpoFixtures.today),
-    NpoFixtures.resolveProject(fixtures), tmpWh())
 
   private def tmpWh(): String =
     java.nio.file.Files.createTempDirectory("graft_sqlwh").toFile.getAbsolutePath
@@ -305,12 +297,6 @@ class SqlModelSpec extends SparkSpec {
             assert(x === y, s"$name row $i col ${sql.columns(j)}: $x != $y")
         }
       }
-    }
-  }
-
-  test("all ten SQL-text models are frame-identical to the compiled builders (full SQL DAG)") {
-    SqlReporting.allNames.foreach { n =>
-      assertFrameEqual(n, sqlBuilt(n), scalaBuilt(n))
     }
   }
 
@@ -404,14 +390,13 @@ class SqlModelSpec extends SparkSpec {
     assert(reauthored != text)
     val today = NpoFixtures.today
     val vars = Map("today" -> s"DATE '$today'")
-    def mk(t: String) = SqlModel.fromSqlText("atinternet_smarttag_streams_daily_v4", t,
-      graft.engine.IncrementalInsertOverwrite("evt_date",
-        graft.models.StreamsDaily.partitionsFor(today)),
-      schema = Some("atinternet_smarttag_streams_daily"),
-      database = Some(NpoDag.database), vars = vars)
+    val proj = SqlReporting.project(today, spark)
+    val streams = proj.model("atinternet_smarttag_streams_daily_v4")
+    def mk(t: String) = SqlModel.fromSqlText(streams.name, t, streams.materialization,
+      schema = streams.schema, database = streams.database, vars = vars)
     val wh = tmpWh()
-    val upstream = SqlReporting.dagModels(today)
-      .filterNot(_.name == "atinternet_smarttag_streams_daily_v4")
+    val upstream = DagRunner.withLazyUpstreams(proj.models, Seq(streams))
+      .filterNot(_.name == streams.name)
     // Run 1: the ORIGINAL text seeds the warehouse target. Snapshot the
     // rows eagerly — run 2's insert_overwrite replaces the files this
     // lazy frame reads.

@@ -145,7 +145,12 @@ class StreamingSpec extends SparkSpec {
     import graft.models.testkit.NpoFixtures
 
     val fixtures = NpoFixtures.all(spark)
-    val parts = graft.models.StreamsDaily.partitionsFor(NpoFixtures.today)
+    val proj = graft.models.SqlReporting.project(NpoFixtures.today, spark)
+    val model = proj.model("atinternet_smarttag_streams_daily_v4")
+    val parts = model.materialization match {
+      case graft.engine.IncrementalInsertOverwrite(_, p) => p
+      case other => fail(s"expected insert_overwrite, got $other")
+    }
 
     // Stream the raw NPO media_events feed through the daily rollup.
     val stream = MemoryStream[graft.models.testkit.NpoFixtures.Me]
@@ -160,7 +165,8 @@ class StreamingSpec extends SparkSpec {
     // Batch side: the materialized streams-daily model, rolled to dates.
     val wh = java.nio.file.Files.createTempDirectory("graft_sp").toFile.getAbsolutePath
     val built = graft.engine.DagRunner.run(spark,
-      graft.models.NpoDag.models(NpoFixtures.today), fixtures.apply, wh)
+      graft.engine.DagRunner.withLazyUpstreams(proj.models, Seq(model)),
+      NpoFixtures.resolveProject(fixtures), wh)
     val batch = built("atinternet_smarttag_streams_daily_v4")
       .groupBy("evt_date")
       .agg(sum("evt_playback_time_total_in_sec").as("playback_sec"))
