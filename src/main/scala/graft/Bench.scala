@@ -84,18 +84,7 @@ object Bench {
     val prefixes = args.headOption.toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
     val prefix = if (prefixes.isEmpty) "" else "set"
     def selected(name: String): Boolean = prefixes.exists(name.startsWith)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def buildSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = buildSession()
+    var spark = Sessions.local()
     // Disk-safe full-run mode (VERDICT r11 #2): one long-lived local JVM
     // accumulates shuffle files for every stage it ever ran (~50 GB over
     // the full surface at sf10 — local mode has no executor lifecycle to
@@ -117,7 +106,7 @@ object Bench {
         spark.stop()
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
-        spark = buildSession()
+        spark = Sessions.local()
         // Untimed micro-warmup: absorb scheduler/session re-init so the
         // next timed query measures its plan, not the restart.
         spark.range(100000).selectExpr("sum(id) AS s")

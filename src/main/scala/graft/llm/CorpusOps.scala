@@ -761,8 +761,6 @@ object CorpusOps {
     *  - `stats/`: the 1-row (n_docs, total_len) pair.
     */
   private[graft] object Bm25Index {
-    private val memo = scala.collection.mutable.Set.empty[String]
-
     private def tokenize(docs: DataFrame): DataFrame = docs
       .select(col("doc_id"), explode(splitLit(col("text"), " ")).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
@@ -857,7 +855,7 @@ object CorpusOps {
       * fingerprint.
       */
     def ensure(s: SparkSession, dir: String): String =
-      ensureRoot(s, dir, "spark.graft.bm25Root", "/root/repo/fixtures/bm25") { root =>
+      ensureRoot(s, dir, "bm25") { root =>
         buildInto(s, Tables.load(s, dir, "documents").filter(col("doc_id") >= 10), root)
       }
 
@@ -868,7 +866,7 @@ object CorpusOps {
       * index-free BM25, which shares the oracle).
       */
     def ensureIncremental(s: SparkSession, dir: String): String =
-      ensureRoot(s, dir, "spark.graft.bm25IncRoot", "/root/repo/fixtures/bm25inc") { root =>
+      ensureRoot(s, dir, "bm25Inc") { root =>
         val docs = Tables.load(s, dir, "documents").filter(col("doc_id") >= 10)
         val cut = docs.agg(expr("10 + ((max(doc_id) - 10) * 9) div 10").as("c"))
           .head().getLong(0)
@@ -876,22 +874,8 @@ object CorpusOps {
         addDocuments(s, docs.filter(col("doc_id") >= cut), root)
       }
 
-    private def ensureRoot(s: SparkSession, dir: String, conf: String,
-                           defaultBase: String)(build: String => Unit): String = synchronized {
-      val hconf = s.sparkContext.hadoopConfiguration
-      val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val st = srcPath.getFileSystem(hconf).getFileStatus(srcPath)
-      val fp = s"${st.getLen}_${st.getModificationTime}"
-      val base = s.conf.get(conf, defaultBase)
-      val prefix = s"${srcPath.getParent.getName}_"
-      val root = s"$base/$prefix$fp"
-      val markerName = "_GRAFT_BM25_v3"
-      graft.sources.Artifacts.pruneStaleSiblings(s, base, prefix, s"$prefix$fp")
-      if (!memo(s"$root/$markerName"))
-        graft.sources.Artifacts.ensureOnce(s, root, markerName)(build(root))
-      memo += s"$root/$markerName"
-      root
-    }
+    private def ensureRoot(s: SparkSession, dir: String, kind: String)(build: String => Unit): String =
+      graft.sources.Artifacts.sourceRoot(s, dir, "documents", kind, "_GRAFT_BM25_v3")(build)
   }
 
   /** BM25 over a persisted v2 index root: tokenize only the (tiny)

@@ -2196,8 +2196,6 @@ object DedupOps {
     * the same state.
     */
   private[graft] object DedupState {
-    private val memo = scala.collection.mutable.Set.empty[String]
-
     def starsPath(s: SparkSession, root: String): String =
       graft.sources.Artifacts.generationPath(s, root, "stars")
 
@@ -2258,28 +2256,16 @@ object DedupOps {
       * but src7 (backfill), then src7 applied as the ingest batch —
       * built once per source fingerprint like the BM25/IVF/PQ roots.
       */
-    def ensure(s: SparkSession, dir: String): String = synchronized {
-      val hconf = s.sparkContext.hadoopConfiguration
-      val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val st = srcPath.getFileSystem(hconf).getFileStatus(srcPath)
-      val fp = s"${st.getLen}_${st.getModificationTime}"
-      val base = s.conf.get("spark.graft.dedupStateRoot", "/root/repo/fixtures/dedupstate")
-      val prefix = s"${srcPath.getParent.getName}_"
-      val root = s"$base/$prefix$fp"
-      val markerName = "_GRAFT_DEDUPSTATE_v1"
-      graft.sources.Artifacts.pruneStaleSiblings(s, base, prefix, s"$prefix$fp")
-      if (!memo(s"$root/$markerName"))
-        graft.sources.Artifacts.ensureOnce(s, root, markerName) {
-          val src = Tables.loadSpread(s, dir, "documents").select(col("doc_id"), col("source"))
-          val bands = bandHashes(s, dir).join(src, "doc_id").persist()
-          try {
-            buildInto(s, bands.filter(col("source") =!= "src7"), root)
-            applyBatch(s, bands.filter(col("source") === "src7"), root)
-          } finally bands.unpersist()
-        }
-      memo += s"$root/$markerName"
-      root
-    }
+    def ensure(s: SparkSession, dir: String): String =
+      graft.sources.Artifacts.sourceRoot(s, dir, "documents", "dedupState",
+          "_GRAFT_DEDUPSTATE_v1") { root =>
+        val src = Tables.loadSpread(s, dir, "documents").select(col("doc_id"), col("source"))
+        val bands = bandHashes(s, dir).join(src, "doc_id").persist()
+        try {
+          buildInto(s, bands.filter(col("source") =!= "src7"), root)
+          applyBatch(s, bands.filter(col("source") === "src7"), root)
+        } finally bands.unpersist()
+      }
   }
 
   /** Incremental dedup-GROUP maintenance — the closure counterpart of

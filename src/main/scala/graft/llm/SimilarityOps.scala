@@ -128,8 +128,6 @@ object SimilarityOps {
     * marker lets later sessions reuse the artifact.
     */
   private[graft] object IvfIndex {
-    private val memo = scala.collection.mutable.Set.empty[String]
-
     /** Centroid table (c_label, centroid) for the given cells of a
       * cell-partitioned corpus — coarse quantizer as (label, pos, c)
       * then re-assembled in pos order: portable and shuffle-light (the
@@ -357,34 +355,18 @@ object SimilarityOps {
       splits
     }
 
-    private def ensureRoot(s: SparkSession, dir: String, conf: String,
-                           defaultBase: String)(build: String => Unit): (String, String) = synchronized {
-      // The ROOT embeds a fingerprint of the source parquet (size +
-      // mtime): a regenerated corpus gets a fresh index directory, and
-      // two different dirs sharing a basename can never serve each
-      // other's cells (stale roots are just dead directories).
-      val hconf = s.sparkContext.hadoopConfiguration
-      val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-      val srcFs = srcPath.getFileSystem(hconf)
-      val st = srcFs.getFileStatus(srcPath)
-      val fp = s"${st.getLen}_${st.getModificationTime}"
-      // Index location is deployment conf, not code: spark.graft.ivfRoot
-      // points at the shared index store (HDFS/S3 on a cluster — all
-      // artifact IO goes through the Hadoop FileSystem API, never
-      // java.io); the default is this sandbox's fixture dir.
-      val base = s.conf.get(conf, defaultBase)
-      val prefix = s"${srcPath.getParent.getName}_"
-      val root = s"$base/$prefix$fp"
-      val markerName = "_GRAFT_IVF_v2"
-      graft.sources.Artifacts.pruneStaleSiblings(s, base, prefix, s"$prefix$fp")
-      if (!memo(s"$root/$markerName"))
-        graft.sources.Artifacts.ensureOnce(s, root, markerName)(build(root))
-      memo += s"$root/$markerName"
+    /** (corpus, live centroids) of the `kind` index over `dir`'s
+      * embeddings, built once per source fingerprint (`sub` keeps the
+      * k-means cell counts apart).
+      */
+    private def ensureRoot(s: SparkSession, dir: String, kind: String, sub: String = "")(
+        build: String => Unit): (String, String) = {
+      val root = graft.sources.Artifacts.sourceRoot(s, dir, "embeddings", kind, "_GRAFT_IVF_v2", sub)(build)
       (s"$root/corpus", centroidsPath(s, root))
     }
 
     def ensure(s: SparkSession, dir: String): (String, String) =
-      ensureRoot(s, dir, "spark.graft.ivfRoot", "/root/repo/fixtures/ivf") { root =>
+      ensureRoot(s, dir, "ivf") { root =>
         buildInto(s, Tables.load(s, dir, "embeddings"), root)
       }
 
@@ -411,9 +393,7 @@ object SimilarityOps {
       // The k$cells subdir applies UNDER a conf-supplied root too —
       // otherwise two cell counts would serve each other's layouts
       // whenever spark.graft.ivfKmRoot is set.
-      val kmBase =
-        s.conf.get("spark.graft.ivfKmRoot", "/root/repo/fixtures/ivfkm") + s"/k$cells"
-      ensureRoot(s, dir, "spark.graft.ivfKmCellRoot__internal", kmBase) { root =>
+      ensureRoot(s, dir, "ivfKm", sub = s"k$cells") { root =>
         val asg = kmeansAssignK(quantEmb(s, dir), cells, rounds = 3)
         val emb = Tables.load(s, dir, "embeddings")
           .drop("label")
@@ -430,7 +410,7 @@ object SimilarityOps {
       * index answers identically to the from-scratch one.
       */
     def ensureIncremental(s: SparkSession, dir: String): (String, String) =
-      ensureRoot(s, dir, "spark.graft.ivfIncRoot", "/root/repo/fixtures/ivfinc") { root =>
+      ensureRoot(s, dir, "ivfInc") { root =>
         val emb = Tables.load(s, dir, "embeddings")
         val cut = emb.agg(expr("(max(vec_id) * 9) div 10").as("c")).head().getLong(0)
         buildInto(s, emb.filter(col("vec_id") < cut), root)
@@ -1001,35 +981,21 @@ object SimilarityOps {
       autoLshBpb(n) > readBpb(s, root)
     }
 
-    private val memo = scala.collection.mutable.Set.empty[String]
-
     /** Fixture state for `llm_semantic_dedup_inc`: lake = oldest 90% of
       * vec_ids (backfill), newest 10% applied as the ingest batch —
       * geometry pinned at the FULL corpus width (a deployment sizes for
       * the corpus it anticipates), so the full-recompute oracle derives
       * the identical bands.
       */
-    def ensure(s: SparkSession, dir: String): String = synchronized {
-      val hconf = s.sparkContext.hadoopConfiguration
-      val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-      val st = srcPath.getFileSystem(hconf).getFileStatus(srcPath)
-      val fp = s"${st.getLen}_${st.getModificationTime}"
-      val base = s.conf.get("spark.graft.vecDedupStateRoot", "/root/repo/fixtures/vecdedupstate")
-      val prefix = s"${srcPath.getParent.getName}_"
-      val root = s"$base/$prefix$fp"
-      val markerName = "_GRAFT_VECDEDUPSTATE_v1"
-      graft.sources.Artifacts.pruneStaleSiblings(s, base, prefix, s"$prefix$fp")
-      if (!memo(s"$root/$markerName"))
-        graft.sources.Artifacts.ensureOnce(s, root, markerName) {
-          val emb = Tables.load(s, dir, "embeddings")
-          val bpb = autoLshBpb(emb.count())
-          val cut = emb.agg(expr("(max(vec_id) * 9) div 10").as("c")).head().getLong(0)
-          buildInto(s, emb.filter(col("vec_id") < cut), root, Some(bpb))
-          applyBatch(s, emb.filter(col("vec_id") >= cut), root)
-        }
-      memo += s"$root/$markerName"
-      root
-    }
+    def ensure(s: SparkSession, dir: String): String =
+      graft.sources.Artifacts.sourceRoot(s, dir, "embeddings", "vecDedupState",
+          "_GRAFT_VECDEDUPSTATE_v1") { root =>
+        val emb = Tables.load(s, dir, "embeddings")
+        val bpb = autoLshBpb(emb.count())
+        val cut = emb.agg(expr("(max(vec_id) * 9) div 10").as("c")).head().getLong(0)
+        buildInto(s, emb.filter(col("vec_id") < cut), root, Some(bpb))
+        applyBatch(s, emb.filter(col("vec_id") >= cut), root)
+      }
   }
 
   /** Incremental semantic-dedup groups over the persisted vector state —
@@ -1899,7 +1865,6 @@ object SimilarityOps {
     * codebook and full encoding to judge it.
     */
   private[graft] object PqIndex {
-    private val memo = scala.collection.mutable.Set.empty[String]
     private def vbOf = expr("substring(md5(cast(vec_id as string)), 1, 2)")
 
     /** Live codebook generation (pointer-file resolved per read) —
@@ -2004,26 +1969,13 @@ object SimilarityOps {
     /** Base build on the oldest 90% of vec_ids (codebook + codes), the
       * newest 10% applied as a delta batch — the daily-lake shape.
       */
-    def ensureIncremental(s: SparkSession, dir: String): String = synchronized {
-      val hconf = s.sparkContext.hadoopConfiguration
-      val srcPath = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-      val st = srcPath.getFileSystem(hconf).getFileStatus(srcPath)
-      val fp = s"${st.getLen}_${st.getModificationTime}"
-      val base = s.conf.get("spark.graft.pqIncRoot", "/root/repo/fixtures/pqinc")
-      val prefix = s"${srcPath.getParent.getName}_"
-      val root = s"$base/$prefix$fp"
-      val markerName = "_GRAFT_PQ_v2"
-      graft.sources.Artifacts.pruneStaleSiblings(s, base, prefix, s"$prefix$fp")
-      if (!memo(s"$root/$markerName"))
-        graft.sources.Artifacts.ensureOnce(s, root, markerName) {
-          val emb = Tables.load(s, dir, "embeddings")
-          val cut = emb.agg(expr("(max(vec_id) * 9) div 10").as("c")).head().getLong(0)
-          buildInto(s, emb.filter(col("vec_id") < cut), root)
-          addVectors(s, emb.filter(col("vec_id") >= cut), root)
-        }
-      memo += s"$root/$markerName"
-      root
-    }
+    def ensureIncremental(s: SparkSession, dir: String): String =
+      graft.sources.Artifacts.sourceRoot(s, dir, "embeddings", "pqInc", "_GRAFT_PQ_v2") { root =>
+        val emb = Tables.load(s, dir, "embeddings")
+        val cut = emb.agg(expr("(max(vec_id) * 9) div 10").as("c")).head().getLong(0)
+        buildInto(s, emb.filter(col("vec_id") < cut), root)
+        addVectors(s, emb.filter(col("vec_id") >= cut), root)
+      }
   }
 
   /** ADC top-k over the incrementally-maintained PQ index. The oracle

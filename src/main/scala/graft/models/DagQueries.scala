@@ -37,6 +37,18 @@ object DagQueries {
     s.read.parquet(NpoParquet.model(name))
   }
 
+  /** The checked-in text project, loaded once per session (`today` is
+    * fixed, so every load would read, parse and render the same files).
+    */
+  private var loaded: Option[(SparkSession, graft.engine.ProjectLoader.DbtProject)] = None
+  private def project(s: SparkSession): graft.engine.ProjectLoader.DbtProject = synchronized {
+    loaded.collect { case (ls, p) if ls eq s => p }.getOrElse {
+      val p = SqlReporting.project(today, s)
+      loaded = Some(s -> p)
+      p
+    }
+  }
+
   /** Build one model of the checked-in text project (`fixtures/npo_project`,
     * loaded by [[graft.engine.ProjectLoader]]) over the fixture parquet:
     * a ref to another substantive model reads that model's materialized
@@ -46,7 +58,7 @@ object DagQueries {
     */
   private def textModel(s: SparkSession, name: String,
       inputs: PartialFunction[String, DataFrame] = PartialFunction.empty): DataFrame = {
-    val m = SqlReporting.project(today, s).model(name)
+    val m = project(s).model(name)
     val upstream: String => DataFrame = inputs.applyOrElse(_, (r: String) =>
       if (SqlReporting.allNames.contains(r)) modelDf(s, r)
       else srcDf(s, NpoFixtures.physicalAliases.getOrElse(r, r)))
@@ -805,7 +817,7 @@ object DagQueries {
   private val projectDashboard = QueryDef(
     "dag_project_dashboard",
     (s, _) => {
-      val proj = SqlReporting.project(today, s)
+      val proj = project(s)
       // The project's six reporting models are one wide independent DAG
       // level; DagRunner's scheduler overlaps their builds (and each
       // model's Catalyst analysis, which dominates this row at bench

@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * a crashed half-build never passes for complete. All IO goes through
   * the Hadoop FileSystem resolved from the path — local disk and
   * HDFS/S3 behave identically. One implementation for every artifact
-  * (IVF index, media fixtures) so hardening lands in one place.
+  * (the source-fingerprinted roots of [[sourceRoot]], media fixtures) so
+  * hardening lands in one place.
   *
   * Concurrency contract: builders within ONE JVM are serialized per
   * marker path, and a lost marker-create race (another writer finished
@@ -21,6 +22,44 @@ import org.apache.spark.sql.SparkSession
   */
 object Artifacts {
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  /** `root/marker` keys this JVM has already ensured. */
+  private val ensured = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Default base of every source-fingerprinted artifact root. Absolute
+    * on purpose, like `NpoParquet.dir`: a driver started from any working
+    * directory reuses the same roots; the `spark.graft.<kind>Root` confs
+    * are the only override.
+    */
+  private val fixtures = "/root/repo/fixtures"
+
+  /** The root of the `kind` artifact derived from `dir/<table>.parquet`,
+    * built once per source fingerprint: `<base>[/<sub>]/<srcdir>_<fp>`
+    * where `fp` is the source's size and mtime, `srcdir` its parent dir
+    * name and `base` the `spark.graft.<kind>Root` conf, defaulting to
+    * the repository's `fixtures/<kind lowercased>`. A regenerated source
+    * mints a fresh root, so two sources can never serve each other's
+    * artifact; `sub` separates layouts of one source (the k-means cell
+    * count) and nests under a conf-supplied base too. The first call per root in this JVM
+    * prunes stale siblings and runs [[ensureOnce]] with `marker`; later
+    * calls return the root without touching the file system beyond the
+    * source stat.
+    */
+  def sourceRoot(s: SparkSession, dir: String, table: String, kind: String,
+                 marker: String, sub: String = "")(build: String => Unit): String = {
+    val src = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    val st = src.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(src)
+    val base = s.conf.get(s"spark.graft.${kind}Root", s"$fixtures/${kind.toLowerCase}") +
+      (if (sub.isEmpty) "" else s"/$sub")
+    val prefix = s"${src.getParent.getName}_"
+    val name = s"$prefix${st.getLen}_${st.getModificationTime}"
+    val root = s"$base/$name"
+    if (!ensured.contains(s"$root/$marker")) {
+      pruneStaleSiblings(s, base, prefix, name)
+      ensureOnce(s, root, marker)(build(root))
+      ensured.add(s"$root/$marker")
+    }
+    root
+  }
 
   /** Delete sibling roots under `base` that share `prefix` (same source
     * table) but are not `keep` (the current fingerprint): every
@@ -32,9 +71,9 @@ object Artifacts {
     * Assumes one live source per basename under `base`: two source dirs
     * sharing a basename (`/a/sf0.1` and `/b/sf0.1`) would prune each
     * other's roots on alternating access. Give such deployments distinct
-    * artifact bases via the `spark.graft.*Root` confs.
+    * artifact bases via the `spark.graft.<kind>Root` confs.
     */
-  def pruneStaleSiblings(s: SparkSession, base: String, prefix: String, keep: String): Unit =
+  private def pruneStaleSiblings(s: SparkSession, base: String, prefix: String, keep: String): Unit =
     try {
       val basePath = new org.apache.hadoop.fs.Path(base)
       val fs = basePath.getFileSystem(s.sparkContext.hadoopConfiguration)

@@ -164,25 +164,11 @@ object SourceFormats {
     * partitioned layout lost nothing.
     */
   private object PartDocs {
-    private val memo = scala.collection.mutable.Set.empty[String]
-    def ensure(s: SparkSession, dir: String): String = synchronized {
-      val hconf = s.sparkContext.hadoopConfiguration
-      val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val st = srcPath.getFileSystem(hconf).getFileStatus(srcPath)
-      val fp = s"${st.getLen}_${st.getModificationTime}"
-      val base = s.conf.get("spark.graft.partDocsRoot", "/root/repo/fixtures/partdocs")
-      val prefix = s"${srcPath.getParent.getName}_"
-      val root = s"$base/$prefix$fp"
-      val markerName = "_GRAFT_PARTDOCS_v1"
-      Artifacts.pruneStaleSiblings(s, base, prefix, s"$prefix$fp")
-      if (!memo(s"$root/$markerName"))
-        Artifacts.ensureOnce(s, root, markerName) {
-          Tables.load(s, dir, "documents")
-            .write.mode("overwrite").partitionBy("lang").parquet(s"$root/docs")
-        }
-      memo += s"$root/$markerName"
-      s"$root/docs"
-    }
+    def ensure(s: SparkSession, dir: String): String =
+      Artifacts.sourceRoot(s, dir, "documents", "partDocs", "_GRAFT_PARTDOCS_v1") { root =>
+        Tables.load(s, dir, "documents")
+          .write.mode("overwrite").partitionBy("lang").parquet(s"$root/docs")
+      } + "/docs"
   }
 
   private val partitionPrune = QueryDef(
@@ -210,28 +196,14 @@ object SourceFormats {
     * identical.
     */
   private object EvoDocs {
-    private val memo = scala.collection.mutable.Set.empty[String]
-    def ensure(s: SparkSession, dir: String): String = synchronized {
-      val hconf = s.sparkContext.hadoopConfiguration
-      val srcPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-      val st = srcPath.getFileSystem(hconf).getFileStatus(srcPath)
-      val fp = s"${st.getLen}_${st.getModificationTime}"
-      val base = s.conf.get("spark.graft.evoDocsRoot", "/root/repo/fixtures/evodocs")
-      val prefix = s"${srcPath.getParent.getName}_"
-      val root = s"$base/$prefix$fp"
-      val markerName = "_GRAFT_EVODOCS_v1"
-      Artifacts.pruneStaleSiblings(s, base, prefix, s"$prefix$fp")
-      if (!memo(s"$root/$markerName"))
-        Artifacts.ensureOnce(s, root, markerName) {
-          val docs = Tables.load(s, dir, "documents")
-          docs.select("doc_id", "text")
-            .write.mode("overwrite").parquet(s"$root/docs/v=1")
-          docs.select("doc_id", "text", "lang", "n_chars")
-            .write.mode("overwrite").parquet(s"$root/docs/v=2")
-        }
-      memo += s"$root/$markerName"
-      s"$root/docs"
-    }
+    def ensure(s: SparkSession, dir: String): String =
+      Artifacts.sourceRoot(s, dir, "documents", "evoDocs", "_GRAFT_EVODOCS_v1") { root =>
+        val docs = Tables.load(s, dir, "documents")
+        docs.select("doc_id", "text")
+          .write.mode("overwrite").parquet(s"$root/docs/v=1")
+        docs.select("doc_id", "text", "lang", "n_chars")
+          .write.mode("overwrite").parquet(s"$root/docs/v=2")
+      } + "/docs"
   }
 
   private val schemaEvolution = QueryDef(

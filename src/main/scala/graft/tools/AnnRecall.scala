@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,14 +25,7 @@ object AnnRecall {
     val k = if (args.length > 1) args(1).toInt else 10
     val nprobes = (if (args.length > 2) args(2) else "1,2,3").split(",").map(_.trim.toInt).toSeq
     val nq = if (args.length > 3) args(3).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     GraftFunctions.register(spark)
 
     val emb = Tables.load(spark, sfDir, "embeddings")

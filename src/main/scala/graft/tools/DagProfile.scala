@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.DagRunner
 import graft.models.SqlReporting
 import graft.models.testkit.{NpoFixtures, NpoParquet}
@@ -15,14 +13,7 @@ import graft.models.testkit.{NpoFixtures, NpoParquet}
 object DagProfile {
   def main(args: Array[String]): Unit = {
     val iters = args.headOption.flatMap(_.toIntOption).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     NpoParquet.ensure(spark)
     def resolve(n: String) =
       spark.read.parquet(NpoParquet.src(NpoFixtures.physicalAliases.getOrElse(n, n)))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Plan-audit main: print the formatted physical plan (and optionally
@@ -25,14 +23,7 @@ object Explain {
       .filterNot(a => confs.exists(_ == (a.split("=", 2) match {
         case Array(k, v) => (k, v); case _ => ("", "")
       })))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

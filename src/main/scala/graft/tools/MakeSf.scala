@@ -90,14 +90,7 @@ object MakeSf {
     val perturb = args.drop(3).contains("--perturb")
     val zipf = args.drop(3).contains("--zipf")
     val zipfDocs = args.drop(3).contains("--zipfdocs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     run(spark, src, dst, copies, perturb, zipf, zipfDocs)
     spark.stop()
   }

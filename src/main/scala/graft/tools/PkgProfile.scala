@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling main for the file-frontend fixed cost (VERDICT r12 #4):
   * decompose a dag_pkg_* row into ProjectLoader.load / DagRunner.run /
   * query-execution time. Usage: runMain graft.tools.PkgProfile <sfDir> <model>
@@ -10,14 +8,7 @@ object PkgProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val model = args.lift(1).getOrElse("orders_dateparts")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     // --raw: time the equivalent hand-built frame (no file frontend) to
     // separate frontend cost from expression cost.
     if (args.contains("--raw")) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round survey main: dump `.explain("formatted")` for EVERY
   * declared query to `<outDir>/<name>.txt` and print one summary line per
   * query (exchange / sort-aggregate / expand / cartesian / SMJ counts +
@@ -14,14 +12,7 @@ object PlanScan {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/plans")
     val prefix = args.lift(2).getOrElse("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.startsWith(prefix))

@@ -17,9 +17,11 @@ import scala.jdk.CollectionConverters._
   */
 class FixtureTrackingSpec extends AnyFunSuite {
 
-  /** Roots produced at runtime by marker-guarded generators (ensureRoot /
-    * ensureMedia / ensureNpoParquet ...), keyed off testdata — never
-    * checked in. Keep in sync with the `ensure*` sites in src/main.
+  /** Roots produced at runtime by marker-guarded generators, keyed off
+    * testdata — never checked in: the `<kind lowercased>` default dirs of
+    * every `Artifacts.sourceRoot` kind, plus `MediaFixtures` (media) and
+    * `NpoParquet` (npo). Keep in sync with the kinds passed to
+    * `Artifacts.sourceRoot` in src/main.
     */
   private val generatedRoots = Set(
     "partdocs", "evodocs", "ivf", "ivfinc", "ivfkm", "vecdedupstate", "pqinc",
