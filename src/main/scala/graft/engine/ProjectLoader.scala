@@ -752,7 +752,7 @@ object ProjectLoader {
                        memo: scala.collection.mutable.Map[Path, DbtProject]): DbtProject = {
     // Package macros may render to the engine's native functions
     // (safe_cast); register them in this session before any model SQL
-    // parses. Idempotent (createOrReplaceTempFunction).
+    // parses. Registers once per session.
     graft.functions.GraftFunctions.register(spark)
     val projFile = dir.resolve("dbt_project.yml")
     require(Files.exists(projFile), s"not a dbt project: $projFile does not exist")

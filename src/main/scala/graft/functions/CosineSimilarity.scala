@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -100,35 +102,32 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration facade: makes `cosine_sim(a, b)` available to SQL and
-  * `expr()` in the given session. Idempotent.
+/** Registration facade: makes `cosine_sim(a, b)` and the engine's other
+  * native functions available to SQL and `expr()` in the given session.
+  * Registers once per session: a call on a session whose registry already
+  * holds every function returns at once, so the many call sites cost a
+  * lookup and replace nothing.
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => {
-        require(exprs.length == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSimilarity(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_pairs", exprs => {
-        require(exprs.length == 3, "topk_pairs takes exactly 3 arguments")
-        TopKPairs(exprs(0), exprs(1), exprs(2)).toAggregateExpression()
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_bits", exprs => mkHyperplaneBits(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lexicon_hits", exprs => mkLexiconMatch(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rp_project6", exprs => {
-        require(exprs.length == 1, "rp_project6 takes exactly 1 argument")
-        RpProject6(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "text_clean", exprs => {
-        require(exprs.length == 1, "text_clean takes exactly 1 argument")
-        TextClean(exprs.head)
-      }, "scala_udf")
+  private def arity(name: String, n: Int, exprs: Seq[Expression]): Unit =
+    require(exprs.length == n, s"$name takes exactly $n argument${if (n == 1) "" else "s"}")
+
+  /** Each function's name, implementing class and builder. */
+  private[functions] val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSimilarity], exprs => {
+      arity("cosine_sim", 2, exprs); CosineSimilarity(exprs.head, exprs(1))
+    }),
+    ("topk_pairs", classOf[TopKPairs], exprs => {
+      arity("topk_pairs", 3, exprs); TopKPairs(exprs(0), exprs(1), exprs(2)).toAggregateExpression()
+    }),
+    ("hyperplane_bits", classOf[HyperplaneBits], mkHyperplaneBits),
+    ("lexicon_hits", classOf[LexiconMatch], mkLexiconMatch),
+    ("rp_project6", classOf[RpProject6], exprs => {
+      arity("rp_project6", 1, exprs); RpProject6(exprs.head)
+    }),
+    ("text_clean", classOf[TextClean], exprs => {
+      arity("text_clean", 1, exprs); TextClean(exprs.head)
+    }),
     // Spark's OWN codegen'd bloom-filter pair (the expressions behind
     // Catalyst runtime filter injection), exposed as callable functions
     // so a pipeline can build a membership sketch as a first-class
@@ -139,37 +138,35 @@ object GraftFunctions {
     // subquery) — callers collect the 1-row agg result and re-inject it
     // as a literal, the same conf-bounded driver-artifact discipline as
     // the CMS/centroid tables.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg", exprs => {
-        require(exprs.length == 3,
-          "bloom_agg takes exactly 3 arguments: (xxhash64(key), estItems, numBits)")
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)).toAggregateExpression()
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_contains", exprs => {
-        require(exprs.length == 2,
-          "bloom_contains takes exactly 2 arguments: (sketch, xxhash64(key))")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "safe_cast", exprs => mkSafeCast(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs", exprs => {
-        require(exprs.length == 1, "minhash_sigs takes exactly 1 argument")
-        MinhashSigs(exprs.head)
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lloyd_argmin", exprs => {
-        require(exprs.length == 2, "lloyd_argmin takes exactly 2 arguments")
-        LloydArgmin(exprs.head, exprs(1))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_bands", exprs => {
-        require(exprs.length == 1, "simhash_bands takes exactly 1 argument")
-        SimhashBands(exprs.head)
-      }, "scala_udf")
+    ("bloom_agg", classOf[BloomFilterAggregate], exprs => {
+      require(exprs.length == 3,
+        "bloom_agg takes exactly 3 arguments: (xxhash64(key), estItems, numBits)")
+      new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)).toAggregateExpression()
+    }),
+    ("bloom_contains", classOf[BloomFilterMightContain], exprs => {
+      require(exprs.length == 2,
+        "bloom_contains takes exactly 2 arguments: (sketch, xxhash64(key))")
+      BloomFilterMightContain(exprs(0), exprs(1))
+    }),
+    ("safe_cast", classOf[SafeCast], mkSafeCast),
+    ("minhash_sigs", classOf[MinhashSigs], exprs => {
+      arity("minhash_sigs", 1, exprs); MinhashSigs(exprs.head)
+    }),
+    ("lloyd_argmin", classOf[LloydArgmin], exprs => {
+      arity("lloyd_argmin", 2, exprs); LloydArgmin(exprs.head, exprs(1))
+    }),
+    ("simhash_bands", classOf[SimhashBands], exprs => {
+      arity("simhash_bands", 1, exprs); SimhashBands(exprs.head)
+    }))
+
+  val names: Seq[String] = builders.map(_._1)
+
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!names.forall(n => registry.functionExists(FunctionIdentifier(n))))
+      builders.foreach { case (name, _, build) =>
+        registry.createOrReplaceTempFunction(name, build, "scala_udf")
+      }
   }
 
   private[functions] def mkSafeCast(exprs: Seq[Expression]): SafeCast = {
@@ -218,69 +215,9 @@ object GraftFunctions {
   * functions with no per-session register() call.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[CosineSimilarity].getCanonicalName, "cosine_sim"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSimilarity(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("topk_pairs"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TopKPairs].getCanonicalName, "topk_pairs"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3, "topk_pairs takes exactly 3 arguments")
-        TopKPairs(exprs(0), exprs(1), exprs(2)).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("hyperplane_bits"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[HyperplaneBits].getCanonicalName, "hyperplane_bits"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkHyperplaneBits(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("lexicon_hits"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[LexiconMatch].getCanonicalName, "lexicon_hits"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkLexiconMatch(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("rp_project6"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[RpProject6].getCanonicalName, "rp_project6"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "rp_project6 takes exactly 1 argument")
-        RpProject6(exprs.head)
-      }))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("text_clean"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TextClean].getCanonicalName, "text_clean"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "text_clean takes exactly 1 argument")
-        TextClean(exprs.head)
-      }))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("safe_cast"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SafeCast].getCanonicalName, "safe_cast"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkSafeCast(exprs)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sigs"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinhashSigs].getCanonicalName, "minhash_sigs"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "minhash_sigs takes exactly 1 argument")
-        MinhashSigs(exprs.head)
-      }))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("lloyd_argmin"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[LloydArgmin].getCanonicalName, "lloyd_argmin"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "lloyd_argmin takes exactly 2 arguments")
-        LloydArgmin(exprs.head, exprs(1))
-      }))
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.builders.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getCanonicalName, name), build))
+    }
 }

@@ -92,6 +92,44 @@ class CosineSpec extends SparkSpec {
     }
   }
 
+  test("GraftFunctions.register registers once per session: a second call replaces nothing") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val warnings = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val appender = new AbstractAppender("graft-register-spec", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("replaced a previously registered function")) warnings.add(m)
+      }
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    def builder(n: String) = registry.lookupFunctionBuilder(FunctionIdentifier(n)).get
+    try {
+      // A missing function makes the next call register them all again:
+      // that replaces the other functions and the warnings are seen.
+      GraftFunctions.register(spark)
+      registry.dropFunction(FunctionIdentifier("simhash_bands"))
+      GraftFunctions.register(spark)
+      assert(registry.functionExists(FunctionIdentifier("simhash_bands")))
+      assert(!warnings.isEmpty)
+      warnings.clear()
+      val before = GraftFunctions.names.map(builder)
+      GraftFunctions.register(spark)
+      val after = GraftFunctions.names.map(builder)
+      assert(before.zip(after).forall { case (a, b) => a eq b })
+      assert(warnings.isEmpty, warnings)
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   test("usable from SQL text after registration") {
     GraftFunctions.register(spark)
     val r = spark.sql(
